@@ -154,7 +154,14 @@ class MultipleLinearRegression:
 class SVM:
     """Linear SVM classifier (reference classification/SVM.scala — CoCoA
     solver there; Spark's LinearSVC uses OWL-QN on hinge loss). Labels are
-    ±1 in the reference; Spark wants {0,1} — adapted internally."""
+    ±1 in the reference; Spark wants {0,1} — adapted internally.
+
+    The fitted model is kept without its training summary (``copy()``
+    drops it). The summary holds the training ``SparkSession``, and once
+    that session has run a ``Dataset.observe`` (as ``iterate`` with
+    ``changed_col`` does) it no longer serializes into the ``transform``
+    closure: ``predict`` would fail with ``NotSerializableException:
+    ObservationManager``. No caller reads the summary."""
 
     def __init__(self, reg_param: float = 0.01, iterations: int = 100):
         self._reg = reg_param
@@ -176,7 +183,7 @@ class SVM:
             labelCol="_lbl",
             regParam=self._reg,
             maxIter=self._iters,
-        ).fit(_with_vec(zero_one, features_col))
+        ).fit(_with_vec(zero_one, features_col)).copy()
         return self
 
     def predict(self, df: DataFrame) -> DataFrame:

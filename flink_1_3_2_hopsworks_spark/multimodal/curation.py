@@ -47,7 +47,10 @@ def decode_signals(
     """The funnel's ONE decode pass as a reusable frame:
     ``(id, decoded, brightness, contrast, simhash, n_bytes)`` from one
     Arrow kernel over the binary payloads — payloads never shuffle,
-    never leave the scan. Shared by the batch funnel
+    never leave the scan. ``simhash`` is the exact signed 64-bit
+    ``codecs.ahash64`` of the decoded pixels, or NULL (like brightness
+    and contrast) for an undecodable payload, whatever else shares its
+    Arrow batch. Shared by the batch funnel
     (:func:`image_curation_verdicts`) and the streaming ingest funnel
     (streaming/media_funnel.py). NOT pinned here — each caller owns its
     pin (materialize for the lazy batch plan, persist/unpersist per
@@ -85,6 +88,9 @@ def decode_signals(
                 columns=["decoded", "brightness", "contrast", "simhash",
                          "n_bytes"],
             )
+            # A None among the fingerprints makes the inferred column
+            # float64, rounding every aHash in the batch to 53 bits.
+            out["simhash"] = pd.array([r[3] for r in rows], dtype="Int64")
             out.insert(0, id_col, pdf[id_col].values)
             yield out
 

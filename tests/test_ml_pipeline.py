@@ -107,3 +107,43 @@ def test_splitter_partitions_all_rows(spark):
     train, test = Splitter.random_split(df, 0.75, seed=7)
     assert train.count() + test.count() == 100
     assert train.join(test, "id", "left_semi").count() == 0
+
+
+def test_every_wrapper_predicts_after_observe(spark):
+    """A ``Dataset.observe`` earlier in the session (``iterate`` runs one
+    per superstep with ``changed_col``) must not break any wrapper's
+    ``transform``/``predict``: a fitted model that keeps a reference to
+    the session can no longer be serialized into the task closure."""
+    import pyspark.sql.functions as F
+    from pyspark.sql import Observation
+
+    obs = Observation("obs")
+    spark.range(10).observe(obs, F.count(F.lit(1)).alias("n")).collect()
+    assert obs.get["n"] == 10
+
+    feats = _feature_df(spark, [[float(x), float(x % 3)] for x in range(8)])
+    labelled = spark.createDataFrame(
+        [(1.0 if x > 3 else -1.0, [float(x), float(x % 3)]) for x in range(8)],
+        "label double, features array<double>",
+    )
+    ratings = spark.createDataFrame(
+        [(u, i, float(1 + (u + i) % 5)) for u in range(3) for i in range(3)],
+        "user int, item int, rating double",
+    )
+    outputs = {
+        "StandardScaler": StandardScaler().fit(feats).transform(feats),
+        "MinMaxScaler": MinMaxScaler().fit(feats).transform(feats),
+        "PolynomialFeatures": PolynomialFeatures().fit(feats).transform(feats),
+        "MultipleLinearRegression": MultipleLinearRegression()
+        .fit(labelled)
+        .predict(labelled),
+        "SVM": SVM().fit(labelled).predict(labelled),
+        "KNN(exact)": KNN(k=2, exact=True).fit(feats).predict(feats),
+        "KNN(lsh)": KNN(k=2).fit(feats).predict(feats),
+        "ALS.predict": ALS(rank=2, iterations=2).fit(ratings).predict(ratings),
+        "ALS.recommend": ALS(rank=2, iterations=2)
+        .fit(ratings)
+        .recommend_for_users(2),
+    }
+    for name, out in outputs.items():
+        assert out.collect(), name

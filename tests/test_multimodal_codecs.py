@@ -388,6 +388,37 @@ def test_image_curation_verdicts_stage_semantics(spark):
     assert got[6]["shard"] is not None and got[2]["shard"] is None
 
 
+def test_decode_signals_exact_ahash_in_batch_with_corrupt_payload(spark):
+    """A corrupt payload sharing an Arrow batch with decodable images must
+    not cost them precision: each decoded row's ``simhash`` is exactly
+    ``ahash64`` of its pixels (all 64 bits, not a float64 rounding) and
+    the corrupt row's is NULL. ``coalesce(1)`` forces one batch whatever
+    the core count."""
+    from flink_1_3_2_hopsworks_spark.multimodal.codecs import (
+        ahash64,
+        decode_bmp,
+        encode_bmp,
+    )
+    from flink_1_3_2_hopsworks_spark.multimodal.curation import (
+        decode_signals,
+    )
+    from flink_1_3_2_hopsworks_spark.multimodal.synth import synth_image
+
+    payloads = {k: encode_bmp(synth_image(k, 0)) for k in range(8)}
+    want = {k: ahash64(decode_bmp(p)) for k, p in payloads.items()}
+    # The check has teeth only if some hash is not exact in a float64.
+    assert any(int(float(h)) != h for h in want.values())
+    rows = [(k, bytearray(p)) for k, p in payloads.items()]
+    rows.insert(4, (99, bytearray(b"not a bmp")))
+    media = spark.createDataFrame(rows, "doc_id long, payload binary")
+    got = {
+        r["doc_id"]: r
+        for r in decode_signals(media.coalesce(1), "doc_id").collect()
+    }
+    assert not got[99]["decoded"] and got[99]["simhash"] is None
+    assert {k: got[k]["simhash"] for k in want} == want
+
+
 def test_image_curation_funnel_monotone_and_checksums(spark):
     from flink_1_3_2_hopsworks_spark.catalog import load_table
     from flink_1_3_2_hopsworks_spark.multimodal.curation import (
