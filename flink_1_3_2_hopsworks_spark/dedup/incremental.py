@@ -203,18 +203,15 @@ def incremental_near_ingest(
 
     ``corpus_keys`` (optional) supplies the corpus's POSTING-KEY store
     (:func:`minhash_key_store` output: one ``(id, _band, _bucket)`` row
-    per stored (doc, band), typically key-bucketed on disk by
-    ``_kb = pmod(xxhash64(_band, _bucket), 64)``). With it, the probe
-    reads the slim keys table PRUNED to the batch's bucket set
-    (PartitionFilters — probe I/O stops growing with corpus lifetime),
-    joins candidates, and fetches ONLY the candidate ids' signatures
-    from ``corpus`` for the estimator verify (pruned again by id bucket
-    when the signature store carries ``_kb``). Verdicts are identical to
-    the store-only path: bucket caps computed on the pruned keys are
-    exact for every PROBED bucket (all rows of a bucket share its
-    ``_kb``), and unprobed buckets never join. The keys store must match
-    this call's hash family AND banding (its stamp carries both;
-    mismatch raises).
+    per stored (doc, band)). With it, the probe scans the slim keys
+    table instead of the signatures, joins candidates against the
+    broadcast batch keys, and fetches ONLY the candidate ids' signatures
+    from ``corpus`` for the estimator verify. The scans are not pruned
+    by key bucket: with 64 ``_kb`` buckets, a batch of a few hundred
+    keys touches all of them. Verdicts are identical to the store-only
+    path: bucket caps are computed over the whole keys table. The keys
+    store must match this call's hash family AND banding (its stamp
+    carries both; mismatch raises).
     """
     from flink_1_3_2_hopsworks_spark.dedup.minhash import (
         _shingles,
@@ -401,21 +398,16 @@ def _keyed_corpus_dup_ids(
     batch ids that are near-dups of the stored corpus, computed WITHOUT a
     full signature-store scan:
 
-    1. the slim keys table is pruned to the batch's (band, bucket)
-       bucket-hash set (PartitionFilters when ``_kb``-bucketed on disk);
-    2. probed-bucket caps + the candidate join against the broadcast
-       batch keys give the bounded (corpus id, batch id) candidate set,
-       MATERIALIZED (it is referenced by the id-bucket collect and the
-       verify join — slim ids only, bounded by batch × max_bucket);
-    3. only the candidates' signatures are fetched from the store
-       (pruned by id bucket when the store carries ``_kb``) and verified
-       against the broadcast batch signatures.
+    1. bucket caps over the slim keys table + the candidate join
+       against the broadcast batch keys give the bounded (corpus id,
+       batch id) candidate set, MATERIALIZED (it is referenced by the
+       candidate-id broadcast and the verify join — slim ids only,
+       bounded by batch × max_bucket);
+    2. only the candidates' signatures are fetched from the store (a
+       broadcast semi-join on the candidate ids) and verified against
+       the broadcast batch signatures.
     """
     from flink_1_3_2_hopsworks_spark.operators.iterate import materialize
-    from flink_1_3_2_hopsworks_spark.streaming.stores import (
-        key_bucket,
-        prune_store_by_key,
-    )
 
     kstamps = [
         c for c in corpus_keys.columns if c.startswith(_KEYS_STAMP_PREFIX)
@@ -448,16 +440,9 @@ def _keyed_corpus_dup_ids(
             f"{expected_stamp!r}."
         )
 
-    keys = prune_store_by_key(
-        corpus_keys.select(
-            F.col(id_col).alias("_cid"), "_band", "_bucket",
-            *(["_kb"] if "_kb" in corpus_keys.columns else []),
-        ),
-        batch_side,
-        ["_band", "_bucket"],
+    keys = corpus_keys.select(
+        F.col(id_col).alias("_cid"), "_band", "_bucket"
     )
-    # Caps on the pruned keys are exact for every probed bucket: all rows
-    # of a (band, bucket) share its _kb, and unprobed buckets never join.
     oversized = (
         keys.groupBy("_band", "_bucket")
         .agg(F.count(F.lit(1)).alias("_n"))
@@ -475,16 +460,7 @@ def _keyed_corpus_dup_ids(
         .distinct()
     )
 
-    store_sig = corpus
-    if "_kb" in corpus.columns:
-        ibs = [
-            r[0]
-            for r in cand.select(key_bucket(F.col("_cid")).alias("_kb"))
-            .distinct()
-            .collect()
-        ]
-        store_sig = store_sig.filter(F.col("_kb").isin(ibs))
-    corp_sig = store_sig.select(
+    corp_sig = corpus.select(
         F.col(id_col).alias("_cid"),
         *[F.col(c).alias(f"_c{i}") for i, c in enumerate(sig_cols)],
     ).join(F.broadcast(cand.select("_cid").distinct()), "_cid", "left_semi")
@@ -511,22 +487,21 @@ def minhash_key_store(
 ) -> DataFrame:
     """The POSTING-KEY half of the r11 store layout: one
     ``(id_col, _band, _bucket)`` row per (doc, band), derived from a
-    :func:`minhash_signature_store` frame with the SAME banding algebra
-    the probe uses (:func:`banded_bucket_keys`), plus a stamp column
-    carrying hash family AND banding. Persist each epoch's keys next to
-    the signature store (``<sig_store>_keys/batch_id=N``), bucketed by
-    ``["_band", "_bucket"]`` via streaming/stores.write_bucketed_partition
-    — a small batch's probe then prunes the keys scan to its own buckets
-    instead of scanning every epoch, and the signature store is only
-    touched for the candidates' ids (see incremental_near_ingest's
-    ``corpus_keys``). A stamped ``signatures`` frame (any
-    :func:`minhash_signature_store` output since r7) must agree with this
-    call's ``shingle_k``/``num_hashes``/``portable`` — otherwise the keys
-    store's OWN stamp would misrepresent the hash family its rows were
-    derived from, and the keyed probe (which can only verify the keys
-    stamp) would trust it and silently read the mismatched dimension as
-    'no duplicates'. Same check as ``incremental_near_ingest``'s
-    signature-frame guard; mismatch raises."""
+    :func:`minhash_signature_store` frame with the SAME banding algebra the
+    probe uses (:func:`banded_bucket_keys`), plus a stamp column carrying
+    hash family AND banding. Persist each epoch's keys next to the signature
+    store (``<sig_store>_keys/batch_id=N``, via
+    streaming/stores.write_bucketed_partition on ``["_band", "_bucket"]``) —
+    a batch's probe then scans the slim keys instead of the signatures, and
+    the signature store is only touched for the candidates' ids (see
+    incremental_near_ingest's ``corpus_keys``). A stamped ``signatures``
+    frame (any :func:`minhash_signature_store` output since r7) must agree
+    with this call's ``shingle_k``/``num_hashes``/``portable`` — otherwise
+    the keys store's OWN stamp would misrepresent the hash family its rows
+    were derived from, and the keyed probe (which can only verify the keys
+    stamp) would trust it and silently read the mismatched dimension as 'no
+    duplicates'. Same check as ``incremental_near_ingest``'s signature-frame
+    guard; mismatch raises."""
     stamps = [c for c in signatures.columns if c.startswith(_STAMP_PREFIX)]
     expected = _store_stamp(shingle_k, num_hashes, portable)
     if stamps and stamps != [expected]:

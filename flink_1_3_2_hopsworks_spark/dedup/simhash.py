@@ -131,11 +131,10 @@ def simhash_chunk_keys(
     """``(id_col, simhash, ci, cv)`` — one row per (doc, 16-bit chunk):
     the chunk posting keys of a fingerprint frame, with THE same chunk
     algebra the probes use (:func:`_chunk`), so a persisted posting store
-    and the probe can never drift. Persist each epoch bucketed by
-    ``["ci", "cv"]`` (streaming/stores.write_bucketed_partition) and
+    and the probe can never drift. Persist each epoch (e.g. with
+    streaming/stores.write_bucketed_partition on ``["ci", "cv"]``) and
     :func:`incremental_simhash_ingest` detects the layout by its columns,
-    prunes the store scan to the batch's chunk buckets, and caps probed
-    buckets exactly."""
+    probes the stored chunk rows directly, and caps buckets exactly."""
     return fps.select(
         F.col(id_col),
         F.col(hash_col).alias("simhash"),
@@ -412,12 +411,12 @@ def incremental_simhash_ingest(
 
     ``store_fps`` may be the plain fingerprint table (chunks derived
     here) or the r11 chunk-posting layout (:func:`simhash_chunk_keys`
-    rows, detected by its ``ci``/``cv`` columns) — with the posting
-    layout key-bucketed on disk, the store scan is PRUNED to the batch's
-    chunk buckets, so probe I/O stops growing with corpus lifetime;
-    verdicts are identical (probed-bucket caps are exact on the pruned
-    rows, and an exactly-equal stored hash always survives pruning via
-    its shared chunk-0 bucket).
+    rows, detected by its ``ci``/``cv`` columns) — the posting layout
+    skips re-deriving the chunks of every stored fingerprint per probe;
+    verdicts are identical (the same bucket caps, and an exactly-equal
+    stored hash is found through its ``ci = 0`` row). The scan is not
+    pruned by key bucket: with 64 ``_kb`` buckets, a batch of a few
+    hundred chunk keys touches all of them.
 
     Scale shape (mirrors the MinHash ingest exactly): the store — the
     100 TB side — is only ever SCANNED; its chunk rows stream through
@@ -447,10 +446,6 @@ def incremental_simhash_ingest(
         resolve_duplicate_clusters,
     )
 
-    from flink_1_3_2_hopsworks_spark.streaming.stores import (
-        prune_store_by_key,
-    )
-
     batch = batch_fps.select(
         F.col(id_col).alias("_id"), F.col(hash_col).alias("simhash")
     )
@@ -473,21 +468,11 @@ def incremental_simhash_ingest(
         F.col("_c.cv").alias("cv"),
     )
     if {"ci", "cv"} <= set(store_fps.columns):
-        # r11 chunk-posting layout (simhash_chunk_keys rows, typically
-        # key-bucketed on disk): the scan is pruned to the batch's chunk
-        # buckets — PartitionFilters, probe I/O independent of corpus
-        # lifetime. Caps on the pruned rows are exact for every PROBED
-        # bucket (all rows of a (ci, cv) share its _kb); unprobed buckets
-        # never join. An exactly-equal stored hash shares ALL 4 chunks
-        # with its batch twin, so its ci=0 row always survives pruning —
-        # the equality arm below stays sound.
-        chunks = prune_store_by_key(
-            store_fps.select(
-                F.col(hash_col).alias("simhash"), "ci", "cv",
-                *(["_kb"] if "_kb" in store_fps.columns else []),
-            ),
-            batch_chunks,
-            ["ci", "cv"],
+        # r11 chunk-posting layout (simhash_chunk_keys rows): every
+        # stored hash has one row per chunk, so its ci=0 row carries it
+        # into the equality arm below.
+        chunks = store_fps.select(
+            F.col(hash_col).alias("simhash"), "ci", "cv"
         )
         oversized = (
             chunks.groupBy("ci", "cv")

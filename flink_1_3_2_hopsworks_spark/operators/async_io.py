@@ -32,6 +32,17 @@ from pyspark.sql.types import StructType
 
 Lookup = Callable[[dict], "Awaitable[dict] | dict"]
 
+# Nullable pandas dtypes for the integral and boolean result types: built
+# from a list holding a None (a timed-out row), a plain column would be
+# float64, rounding every long in the batch to 53 bits.
+_NULLABLE_DTYPES = {
+    "bigint": "Int64",
+    "int": "Int32",
+    "smallint": "Int16",
+    "tinyint": "Int8",
+    "boolean": "boolean",
+}
+
 
 def async_lookup(
     df: DataFrame,
@@ -55,52 +66,53 @@ def async_lookup(
         raise ValueError("on_timeout must be 'error' or 'null'")
     extra = StructType.fromDDL(result_schema)
     out_schema = StructType(list(df.schema) + list(extra))
-    null_result = {f.name: None for f in extra}
+    dtypes = {
+        f.name: _NULLABLE_DTYPES.get(f.dataType.simpleString()) for f in extra
+    }
+
+    def result_frame(results: list) -> pd.DataFrame:
+        cols = {}
+        for name, dtype in dtypes.items():
+            vals = [None if r is None else r.get(name) for r in results]
+            cols[name] = pd.array(vals, dtype=dtype) if dtype else vals
+        return pd.DataFrame(cols)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        async def call(sem, row):
+        async def call(sem, i, row):
             async with sem:
                 res = lookup(row)
                 if not asyncio.iscoroutine(res):
-                    return row, res  # plain-function lookups work too
+                    return i, res  # plain-function lookups work too
                 if timeout_seconds is None:
-                    return row, await res
+                    return i, await res
                 try:
-                    return row, await asyncio.wait_for(res, timeout_seconds)
+                    return i, await asyncio.wait_for(res, timeout_seconds)
                 except asyncio.TimeoutError:
                     if on_timeout == "null":
-                        return row, None
+                        return i, None
                     raise
 
         async def drive(rows):
             sem = asyncio.Semaphore(capacity)
-            tasks = [asyncio.create_task(call(sem, r)) for r in rows]
+            tasks = [
+                asyncio.create_task(call(sem, i, r))
+                for i, r in enumerate(rows)
+            ]
             if ordered:
                 return await asyncio.gather(*tasks)
             return [await t for t in asyncio.as_completed(tasks)]
 
-        res_cols = [f.name for f in extra]
         for pdf in batches:
             if pdf.empty:
                 continue
             pairs = asyncio.run(drive(pdf.to_dict("records")))
-            if ordered:
-                # Vectorized assembly (guide §4.2): gather() preserves task
-                # creation order == input row order, so the result columns
-                # concat positionally onto the untouched input batch —
-                # no per-row dict merge, no list-of-dicts frame build.
-                res = pd.DataFrame.from_records(
-                    [r if r is not None else null_result for _, r in pairs],
-                    columns=res_cols,
-                )
-                yield pd.concat((pdf.reset_index(drop=True), res), axis=1)
-            else:
-                # Completion order: rows must be rebuilt alongside results.
-                yield pd.DataFrame(
-                    [
-                        {**row, **(res if res is not None else null_result)}
-                        for row, res in pairs
-                    ]
-                )
+            # Vectorized assembly (guide §4.2): the input rows are taken by
+            # position in emission order (gather() keeps input order;
+            # as_completed() gives completion order) and the result
+            # columns concat onto them — no per-row dict merge.
+            rows = pdf.iloc[[i for i, _ in pairs]].reset_index(drop=True)
+            yield pd.concat(
+                (rows, result_frame([r for _, r in pairs])), axis=1
+            )
 
     return df.mapInPandas(run, out_schema)

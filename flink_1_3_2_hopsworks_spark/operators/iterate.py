@@ -141,12 +141,19 @@ def iterate(
     ``localCheckpoint`` as a ``Dataset.observe`` metric, and the loop stops
     when no row changed — ONE job per superstep instead of two (the
     separate prev⋈curr comparison job a ``converged`` callback costs).
-    The column is dropped from the state between rounds and from the
-    result. Mutually exclusive with ``converged``.
+    A NULL flag counts as unchanged (the sum skips it). The column is
+    dropped from the state between rounds and from the result. Mutually
+    exclusive with ``converged``, and it checkpoints every superstep, so
+    it requires ``checkpoint_every=1``.
     """
     if changed_col is not None:
         if converged is not None:
             raise ValueError("pass either converged or changed_col, not both")
+        if checkpoint_every != 1:
+            raise ValueError(
+                "changed_col checkpoints every superstep; checkpoint_every "
+                f"must be 1, got {checkpoint_every}"
+            )
         from pyspark.sql import Observation
 
         state = _materialize(initial)

@@ -26,7 +26,11 @@ DEFAULT_APP_NAME = "flink-1.3.2-hopsworks-spark"
 
 
 def _local_cpus() -> str:
-    return os.environ.get("SPARK_GRAFT_CPUS", "32")
+    """Local core count: ``SPARK_GRAFT_CPUS`` when set, else the cores
+    this process may run on."""
+    return os.environ.get(
+        "SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0)))
+    )
 
 
 def get_spark(

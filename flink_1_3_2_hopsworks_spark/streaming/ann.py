@@ -164,7 +164,7 @@ def compact_vector_store(
     ``batch_id=-1`` base partition, KEEPING ``cell_col`` as the inner
     partition column — the store's serving layout (``ivfpq_topk`` prunes
     by cell directory) must survive compaction, so the generic
-    key-bucket rewrite does not apply here. One file per non-empty cell
+    flat ``_kb`` rewrite does not apply here. One file per non-empty cell
     in the base (repartition on the cell before the partitioned write,
     the tasks×partitions tiny-file lesson), so the compacted history
     costs ≤ num_cells files regardless of how many epochs it replaces.
@@ -184,10 +184,10 @@ def compact_vector_store(
             .partitionBy(cell_col)
             .parquet(target)
         )
-        # empty-history guard (stores.write_bucketed_partition's
-        # invariant): a dynamic partitionBy of an empty frame writes no
-        # schema-bearing file — land one under cell 0 so the next store
-        # read does not die with UNABLE_TO_INFER_SCHEMA.
+        # empty-history guard: a dynamic partitionBy of an empty frame
+        # writes only _SUCCESS, no schema-bearing file — land one under
+        # cell 0 so the next store read does not die with
+        # UNABLE_TO_INFER_SCHEMA.
         jvm = spark._jvm
         path = jvm.org.apache.hadoop.fs.Path(target)
         fs = path.getFileSystem(spark._jsc.hadoopConfiguration())

@@ -66,7 +66,6 @@ from flink_1_3_2_hopsworks_spark.streaming.neardup import (
 )
 from flink_1_3_2_hopsworks_spark.streaming.stores import (
     compaction_due,
-    prune_store_by_key,
     write_bucketed_partition,
 )
 
@@ -81,13 +80,14 @@ def _default_rules(text_col: str) -> Column:
 
 def _read_fp_store(spark, fp_store_path: str, before_batch_id: int):
     """The fingerprint store's ``_fp`` column (epochs strictly before
-    ``before_batch_id``) plus its ``_kb`` bucket column when the store is
-    key-bucketed (r11 layout — lets the probe prune files), or ``None``
-    on the very first batch. Same visibility rules as the signature
-    store: a replayed epoch must not see its own uncommitted append
-    (every in-batch doc would flip to corpus-dup and the partition would
-    overwrite empty), and a non-epoch-partitioned store is rejected
-    loudly (_read_store's partition-discovery data-loss rationale)."""
+    ``before_batch_id``) plus its ``_kb`` column when the store has one (r11
+    layout; its absence marks a pre-r11 flat store, whose layout the epoch
+    write keeps), or ``None`` on the very first batch. Same visibility rules
+    as the signature store: a replayed epoch must not see its own
+    uncommitted append (every in-batch doc would flip to corpus-dup and the
+    partition would overwrite empty), and a non-epoch-partitioned store is
+    rejected loudly (_read_store's partition-discovery data-loss
+    rationale)."""
     store = _read_store(spark, fp_store_path, before_batch_id)
     if store is None:
         return None
@@ -114,12 +114,12 @@ def seed_funnel_state(
     """Seed both dedup stores with an EXISTING corpus before the stream
     starts: fingerprints and signatures land under the reserved
     ``batch_id=-1`` partitions (visible to every epoch, including epoch-0
-    crash replays reading ``batch_id < 0``), in the r11 key-bucketed
-    layout with the signature store's posting-key sidecar (``bands``
-    must match the funnel's banding — the keys stamp enforces it).
-    Re-seeding into an EXISTING pre-r11 flat store preserves that
-    store's flat layout, per store, mirroring the epoch-append paths
-    (mixed directory depths break partition discovery)."""
+    crash replays reading ``batch_id < 0``), in the r11 layout with the
+    signature store's posting-key sidecar (``bands`` must match the
+    funnel's banding — the keys stamp enforces it). Re-seeding into an
+    EXISTING pre-r11 flat store preserves that store's flat layout, per
+    store, mirroring the epoch-append paths (a store must not mix two
+    layouts)."""
     from flink_1_3_2_hopsworks_spark.streaming.stores import (
         store_layout_is_flat,
     )
@@ -293,12 +293,8 @@ def ingest_funnel_batch(
         fp_store = _read_fp_store(spark, fp_store_path, batch_id)
         if fp_store is not None:
             batch_keys = s1.select("_fp").distinct()
-            # r11 layout: a bucketed store's scan is pruned to the batch's
-            # key buckets (PartitionFilters) BEFORE the broadcast probe —
-            # probe I/O no longer grows with corpus lifetime.
             collisions = (
-                prune_store_by_key(fp_store, s1, "_fp")
-                .select("_fp")
+                fp_store.select("_fp")
                 .join(F.broadcast(batch_keys), "_fp", "left_semi")
                 .distinct()
             )
@@ -402,8 +398,7 @@ def ingest_funnel_batch(
         write_bucketed_partition(
             slim.join(exact_keep.select(id_col), id_col).select(_id, "_fp"),
             fp_store_path, batch_id, "_fp",
-            # a pre-r11 flat store keeps its layout (mixed depths break
-            # parquet partition discovery)
+            # a pre-r11 flat store keeps its layout
             legacy_flat=(fp_store is not None and "_kb" not in fp_store.columns),
         )
         _write_store_epoch(

@@ -55,7 +55,6 @@ from flink_1_3_2_hopsworks_spark.operators.sampling import salted_h32
 from flink_1_3_2_hopsworks_spark.streaming.neardup import _read_store
 from flink_1_3_2_hopsworks_spark.streaming.stores import (
     compaction_due,
-    prune_store_by_key,
     write_bucketed_partition,
 )
 
@@ -79,8 +78,8 @@ def seed_media_funnel_state(
     corpus before the stream starts (reserved ``batch_id=-1`` partitions,
     visible to every epoch including epoch-0 crash replays). Re-seeding
     into an EXISTING pre-r11 flat store preserves that store's flat
-    layout, per store, mirroring the epoch-append paths (mixed directory
-    depths break partition discovery)."""
+    layout, per store, mirroring the epoch-append paths (a store must
+    not mix two layouts)."""
     from flink_1_3_2_hopsworks_spark.streaming.stores import (
         store_layout_is_flat,
     )
@@ -225,11 +224,8 @@ def ingest_media_funnel_batch(
         exact_store = _read_store(spark, exact_store_path, batch_id)
         if exact_store is not None:
             batch_keys = q.select("simhash").distinct()
-            # r11 layout: the bucketed store scan is pruned to the batch's
-            # key buckets (PartitionFilters) before the broadcast probe.
             collisions = (
-                prune_store_by_key(exact_store, q, "simhash")
-                .select("simhash")
+                exact_store.select("simhash")
                 .join(F.broadcast(batch_keys), "simhash", "left_semi")
                 .distinct()
             )

@@ -115,18 +115,18 @@ def seed_signature_store(
     """Seed the ingestion loop's store with an EXISTING corpus before the
     stream starts: signatures land under the reserved ``batch_id=-1``
     partition, visible to every epoch (and to epoch-0 crash replays,
-    which read ``batch_id < 0``). r11 layout: the partition is bucketed
-    by id hash, and the posting-key sidecar (``<store_path>_keys``) gets
-    the seed's (id, band, bucket) rows bucketed by bucket hash — so every
-    later epoch's probe prunes both scans. ``bands`` must match the
-    ingest loop's banding (the keys stamp enforces it).
+    which read ``batch_id < 0``). r11 layout: the rows carry their id's
+    ``_kb`` bucket, and the posting-key sidecar (``<store_path>_keys``)
+    gets the seed's (id, band, bucket) rows — so every later epoch's
+    probe reads the slim sidecar and fetches only its candidates'
+    signatures. ``bands`` must match the ingest loop's banding (the keys
+    stamp enforces it).
 
     ``legacy_flat=None`` (default) mirrors the epoch-append paths:
     re-seeding into an EXISTING pre-r11 flat store preserves its flat,
-    sidecar-less layout (a bucketed seed partition in a flat store mixes
-    directory depths and breaks partition discovery for the whole
-    store); a missing or bucketed store seeds bucketed. Pass an explicit
-    bool to override detection."""
+    sidecar-less layout (a store must not mix two layouts); a missing or
+    r11 store seeds in the r11 layout. Pass an explicit bool to override
+    detection."""
     from flink_1_3_2_hopsworks_spark.streaming.stores import (
         store_layout_is_flat,
     )
@@ -155,14 +155,13 @@ def _write_store_epoch(
     portable: bool,
     legacy_flat: bool,
 ) -> None:
-    """One epoch's store append in the r11 layout: the signature rows
-    bucketed by id hash under ``store_path/batch_id=N``, plus the
-    posting-key sidecar (same derivation as the probe —
-    banded_bucket_keys via minhash_key_store) bucketed by bucket hash
-    under ``<store_path>_keys/batch_id=N``. Both writes project the SAME
-    ``sig_frame`` — the ingest loops pass a slice of their pinned
-    per-epoch signature frame, so the keys derivation is a cache read,
-    and store/keys coverage cannot diverge (both written or neither,
+    """One epoch's store append in the r11 layout: the signature rows under
+    ``store_path/batch_id=N``, plus the posting-key sidecar (same derivation
+    as the probe — banded_bucket_keys via minhash_key_store) under
+    ``<store_path>_keys/batch_id=N``; both carry ``_kb``. Both writes
+    project the SAME ``sig_frame`` — the ingest loops pass a slice of their
+    pinned per-epoch signature frame, so the keys derivation is a cache
+    read, and store/keys coverage cannot diverge (both written or neither,
     and a replayed epoch overwrites both partitions). ``legacy_flat``
     preserves a pre-r11 store's flat, sidecar-less layout."""
     from flink_1_3_2_hopsworks_spark.dedup.incremental import (
@@ -200,7 +199,7 @@ def compact_signature_store(
     crash notes), and the sidecar's base is RE-DERIVED from the
     compacted signatures with the store's own stamped hash family —
     which is also what migrates a legacy flat store (never had a
-    sidecar) into the fully pruned r11 layout in one call. ``bands``
+    sidecar) into the r11 layout in one call. ``bands``
     must match the ingest loop's banding; when a sidecar already
     exists, its stamp is checked against it (mismatch raises, same
     rationale as the probe-time check). Returns the signature store's
@@ -264,7 +263,10 @@ def compact_signature_store(
         bands=bands, portable=portable,
     )
     tmp_root = f"{keys_path}/_compact_tmp"
-    write_bucketed_partition(keys, tmp_root, -1, ["_band", "_bucket"])
+    write_bucketed_partition(
+        keys.coalesce(spark.sparkContext.defaultParallelism),
+        tmp_root, -1, ["_band", "_bucket"],
+    )
     if fs.exists(jvm.org.apache.hadoop.fs.Path(keys_path)):
         for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(keys_path)):
             name = st.getPath().getName()
@@ -281,11 +283,11 @@ def compact_signature_store(
 
 
 def _read_keys_store(spark, store, store_path: str, before_batch_id: int):
-    """The posting-key sidecar for a bucketed signature store (epochs
-    before ``before_batch_id``), or ``None`` when the store is legacy
-    (flat, sidecar-less) — sound by construction: every r11 bucketed
-    epoch writes its sidecar in the same call, so a bucketed store always
-    has matching keys coverage, while a legacy store never has any."""
+    """The posting-key sidecar for an r11 signature store (epochs before
+    ``before_batch_id``), or ``None`` when the store is legacy (flat, no
+    ``_kb``, sidecar-less) — sound by construction: every r11 epoch
+    writes its sidecar in the same call, so an r11 store always has
+    matching keys coverage, while a legacy store never has any."""
     if store is None or "_kb" not in store.columns:
         return None
     return _read_store(spark, f"{store_path}_keys", before_batch_id)
@@ -390,9 +392,9 @@ def ingest_batch(
     pins = push_pin_scope()
     try:
         store = _read_store(spark, store_path, batch_id)
-        # r11 layout: a bucketed store always has a posting-key sidecar
-        # (written in the same epoch call), so the probe prunes both the
-        # keys scan and the candidate signature fetch; a legacy flat
+        # r11 layout: the store always has a posting-key sidecar
+        # (written in the same epoch call), so the probe scans the slim
+        # keys and fetches only the candidates' signatures; a legacy flat
         # store stays on the full-scan path AND keeps its layout.
         keys = _read_keys_store(spark, store, store_path, batch_id)
         legacy = store is not None and "_kb" not in store.columns

@@ -35,11 +35,10 @@ Stage semantics per epoch N:
 
 State & scale contract (inherited from the sibling loops, r11 layouts
 throughout): ZERO Spark streaming state — the four epoch-partitioned
-key-bucketed stores ARE the state, shared with batch backfills; per
-epoch every store is only SCANNED, pruned to the batch's key buckets
-(PartitionFilters); shuffle volume is O(|micro-batch|); exactly-once via
-per-epoch overwrite partitions with own-epoch reads excluded, so crash
-replay is idempotent (pytest-pinned).
+stores ARE the state, shared with batch backfills; per epoch every
+store is only SCANNED, against broadcast batch keys; shuffle volume is
+O(|micro-batch|); exactly-once via per-epoch overwrite partitions with
+own-epoch reads excluded, so crash replay is idempotent (pytest-pinned).
 """
 
 from __future__ import annotations
@@ -69,7 +68,6 @@ from flink_1_3_2_hopsworks_spark.streaming.neardup import (
 )
 from flink_1_3_2_hopsworks_spark.streaming.stores import (
     compaction_due,
-    prune_store_by_key,
     write_bucketed_partition,
 )
 
@@ -237,14 +235,13 @@ def ingest_pair_funnel_batch(
             & (F.col("contrast") >= min_contrast)
         )
 
-        # ---- caption exact dedup vs the fp store (pruned probe) ----
+        # ---- caption exact dedup vs the fp store ----
         p2 = slim.filter(s2)
         fstore = _read_store(spark, fp_store, batch_id)
         if fstore is not None:
             fkeys = p2.select("_fp").distinct()
             fcoll = (
-                prune_store_by_key(fstore, p2, "_fp")
-                .select("_fp")
+                fstore.select("_fp")
                 .join(F.broadcast(fkeys), "_fp", "left_semi")
                 .distinct()
             )
@@ -265,8 +262,7 @@ def ingest_pair_funnel_batch(
         if istore is not None:
             ikeys = p3.select("simhash").distinct()
             icoll = (
-                prune_store_by_key(istore, p3, "simhash")
-                .select("simhash")
+                istore.select("simhash")
                 .join(F.broadcast(ikeys), "simhash", "left_semi")
                 .distinct()
             )
@@ -311,7 +307,7 @@ def ingest_pair_funnel_batch(
         # Legacy guards, mirroring the media funnel's near store: a
         # pre-existing PLAIN fingerprint store (no ci/cv chunk columns)
         # keeps its row layout; a chunk store without _kb keeps its flat
-        # depth. Both flags read the ORIGINAL store — the synthesized
+        # layout. Both flags read the ORIGINAL store — the synthesized
         # empty frame below must not masquerade as a legacy layout.
         near_plain_legacy = (
             nstore is not None and "ci" not in nstore.columns

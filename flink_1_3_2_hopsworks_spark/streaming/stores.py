@@ -1,25 +1,19 @@
-"""Key-bucketed layout for the epoch-partitioned dedup/ANN stores.
+"""Layout and compaction of the epoch-partitioned dedup stores.
 
-The r9/r10 ingest loops read their store as ``batch_id < N`` — correct
-and slim, but probe I/O grows linearly with corpus LIFETIME regardless of
-batch size: a 1k-item crawl increment against a year of epochs scans
-every epoch's full store. The fix is the same trick the IVF code store
-already uses with ``_cell``: bucket each epoch's partition by the PROBE
-KEY, so a small batch's broadcast probe reaches the scan as
-``PartitionFilters`` and skips every file whose bucket the batch does not
-touch — probe I/O becomes O(batch buckets / total buckets) of the store
-instead of all of it.
+Each store epoch lands under ``store_path/batch_id=N`` as plain parquet
+files, at most one per writing task, and every row carries ``_kb``, the bucket
+of its probe key (``pmod(xxhash64(key...), 64)``), as an ordinary
+column. Reads filter ``batch_id < N``; the probes then run as broadcast
+equality semi-joins of the batch's keys against the store scan.
 
-Soundness: pruning a store scan by key-hash bucket is only valid when the
-probe joins on EQUALITY of that exact key (equal keys hash to the same
-bucket, so no match can live in a skipped file). That holds for the
-fingerprint stores (probe key ``_fp`` / ``simhash``). Band-bucket and
-chunk probes prune via their own materialized key columns (the posting
-layouts in dedup/incremental.py and dedup/simhash.py).
-
-The bucket list is COLLECTED from the batch (bounded by ``n_buckets``
-distinct values by construction — never by batch size) because partition
-pruning needs literal predicates; a join cannot prune files.
+Stores are not pruned by key bucket. With 64 buckets, a batch of a few
+hundred distinct keys touches every bucket (past about 265 keys, fewer
+than one bucket is expected to stay untouched), so a bucket filter
+skips no file, while the ``_kb=<n>`` directories it needs cost a
+64-way shuffle and 64 files per epoch write, a bucket-list collect per
+probe, and a parallel partition-discovery job on every store read.
+``_kb`` stays a column so that a store written in the pre-r11 flat
+layout (no ``_kb``) can still be told apart and kept flat.
 """
 
 from __future__ import annotations
@@ -49,39 +43,19 @@ def write_bucketed_partition(
     legacy_flat: bool = False,
     n_buckets: int = N_KEY_BUCKETS,
 ) -> None:
-    """Overwrite ``store_path/batch_id=<batch_id>`` with ``df`` bucketed
-    by ``_kb = key_bucket(key...)`` (hive-partitioned inside the epoch
-    dir; ``key`` is a column name or a list of them).
-    ``legacy_flat=True`` preserves a pre-r11 store's flat layout — parquet
-    partition discovery rejects mixed directory depths, so a store is
-    either uniformly bucketed (new) or uniformly flat (legacy)."""
-    target = f"{store_path}/batch_id={batch_id}"
-    if legacy_flat:
-        df.write.mode("overwrite").parquet(target)
-        return
-    # Repartition ON the bucket before the partitioned write: without it
-    # every upstream task writes a file into every bucket dir it touches
-    # (tasks × buckets tiny files per epoch — measured 2.5x slower epoch
-    # loops at sf0.1). One O(batch) shuffle → one file per bucket.
-    df.withColumn(
-        "_kb", key_bucket(*_key_cols(key), n_buckets=n_buckets)
-    ).repartition(n_buckets, F.col("_kb")).write.mode(
-        "overwrite"
-    ).partitionBy("_kb").parquet(target)
-    # An EMPTY frame under dynamic partitionBy writes only _SUCCESS — no
-    # data file carries the schema, so a store whose FIRST epoch has zero
-    # survivors (or any empty micro-batch) would make the next epoch's
-    # whole-store read fail with UNABLE_TO_INFER_SCHEMA (not the
-    # missing-path condition the loops treat as "no store yet") and crash
-    # the stream permanently. Flat writes never had this hole (an empty
-    # flat write emits one schema-bearing empty file). Restore that
-    # invariant at the same directory DEPTH: when no bucket directory
-    # landed, write one empty schema-bearing file under ``_kb=0`` —
-    # driver-side metadata listing only, no extra job on the data path.
-    if not _has_bucket_dirs(df.sparkSession, target):
-        df.drop("_kb").limit(0).write.mode("overwrite").parquet(
-            f"{target}/_kb=0"
+    """Overwrite ``store_path/batch_id=<batch_id>`` with ``df`` plus its
+    ``_kb = key_bucket(key...)`` column (``key`` is a column name or a
+    list of them): plain files, at most one per writing task. An empty
+    ``df`` still writes one schema-bearing file, so the next read of the
+    store can infer its schema. ``legacy_flat=True`` preserves a pre-r11
+    store's layout by leaving ``_kb`` out: without schema merging, the
+    read takes its schema from one file, so the columns of every epoch
+    must agree."""
+    if not legacy_flat:
+        df = df.withColumn(
+            "_kb", key_bucket(*_key_cols(key), n_buckets=n_buckets)
         )
+    df.write.mode("overwrite").parquet(f"{store_path}/batch_id={batch_id}")
 
 
 def _fs(spark, path: str):
@@ -94,7 +68,7 @@ def count_store_files(spark, store_path: str) -> int:
     """Number of DATA files under ``store_path`` (recursive; ``_``/``.``
     names skipped) — the quantity partition discovery has to LIST on
     every store read, which otherwise grows with crawl lifetime
-    (~epochs × buckets). Driver-side namenode walk, no Spark job."""
+    (~epochs × writing tasks). A namenode walk, no Spark job."""
     fs, root = _fs(spark, store_path)
     if not fs.exists(root):
         return 0
@@ -211,15 +185,13 @@ def compact_store(
 ) -> dict:
     """OFFLINE compaction of an epoch-partitioned store: rewrite every
     epoch ``batch_id < before_batch_id`` into ONE consolidated
-    key-bucketed base partition under the reserved ``batch_id=-1`` —
-    the crawl-lifetime lever the per-epoch layout cannot provide. Probe
-    I/O is already lifetime-bounded by bucket pruning, but FILE COUNT
+    base partition under the reserved ``batch_id=-1`` — the
+    crawl-lifetime lever the per-epoch layout cannot provide. FILE COUNT
     (and with it partition discovery/listing cost on every store read)
-    grows ~epochs × buckets; compaction resets it to ≤ ``n_buckets``
-    files for the whole compacted history. Also the legacy-migration
-    path: a pre-r11 FLAT store comes out uniformly key-bucketed (row
-    layout unchanged — only the directory layout upgrades), after which
-    the ingest loops' probes prune it like any r11 store.
+    grows with every epoch; compaction resets it to at most one file
+    per core for the whole compacted history. Also the legacy-migration path: a
+    pre-r11 FLAT store comes out with the ``_kb`` column (rows otherwise
+    unchanged), like any r11 store.
 
     Correctness contract (the caller's side):
     - ``before_batch_id`` must not exceed the stream's COMMITTED
@@ -228,9 +200,8 @@ def compact_store(
       epoch into it would let that epoch's crash replay see its own
       append and drop every document as a corpus dup.
     - A FLAT store must be compacted in full (every epoch <
-      ``before_batch_id``): a bucketed base next to remaining flat
-      epochs would mix directory depths, which partition discovery
-      rejects. Raises otherwise.
+      ``before_batch_id``): a ``_kb`` base next to remaining flat
+      epochs would mix two layouts in one store. Raises otherwise.
     - Verdict equivalence is exact: reads only ever filter
       ``batch_id < N``, and every compacted row keeps its columns —
       only its epoch attribution collapses to −1 (pytest-pinned against
@@ -262,8 +233,7 @@ def compact_store(
     # ``inner_col`` names the store family's inner partition column
     # (``_kb`` for the key-bucketed dedup stores, ``_cell`` for the ANN
     # code stores) — its absence marks a legacy FLAT store, which must
-    # compact in full (mixed directory depths are rejected by parquet
-    # partition discovery).
+    # compact in full (a store must not mix two layouts).
     flat = inner_col not in store.columns
     fs, root = _fs(spark, store_path)
     epochs = sorted(
@@ -277,9 +247,8 @@ def compact_store(
         raise ValueError(
             f"flat store at {store_path!r} must be compacted in full: "
             f"epochs {sorted(set(epochs) - set(todo))} are >= "
-            f"before_batch_id={before_batch_id}, and a bucketed base "
-            "next to flat epochs mixes directory depths (partition "
-            "discovery rejects the whole store)."
+            f"before_batch_id={before_batch_id}, and a base in the new "
+            "layout next to flat epochs mixes two layouts in one store."
         )
     files_before = count_store_files(spark, store_path)
     if len(todo) < 2 and not flat:
@@ -300,8 +269,12 @@ def compact_store(
         # ``<tmp_root>/batch_id=-1`` at the store's regular depth.
         writer(base, tmp_root)
     else:
+        # at most one file per core, however many epochs fold in
         write_bucketed_partition(
-            base.drop(inner_col), tmp_root, -1, key, n_buckets=n_buckets
+            base.drop(inner_col).coalesce(
+                spark.sparkContext.defaultParallelism
+            ),
+            tmp_root, -1, key, n_buckets=n_buckets,
         )
     rows = spark.read.parquet(f"{tmp_root}/batch_id=-1").count()
     jvm = spark._jvm
@@ -330,12 +303,11 @@ def compact_store(
 
 def store_layout_is_flat(spark, store_path: str) -> bool:
     """True when an EXISTING store at ``store_path`` was written in the
-    pre-r11 flat layout (no ``_kb`` partition column). The seed functions
-    use this to preserve a legacy store's layout when re-seeding
-    ``batch_id=-1`` into it — mixing a bucketed seed partition into a
-    flat store (or vice versa) gives parquet partition discovery mixed
-    directory depths and breaks every later read of the WHOLE store. A
-    missing store reads as not-flat: fresh stores take the bucketed
+    pre-r11 flat layout (no ``_kb`` column). The seed functions use this
+    to preserve a legacy store's layout when re-seeding ``batch_id=-1``
+    into it — the read takes its schema from one file, so a store that
+    mixes epochs with and without ``_kb`` would read as either layout. A
+    missing store reads as not-flat: fresh stores take the ``_kb``
     layout. Any error other than the missing-path condition propagates
     (same rationale as ``_is_path_not_found``)."""
     from pyspark.errors import AnalysisException
@@ -351,42 +323,3 @@ def store_layout_is_flat(spark, store_path: str) -> bool:
             return False
         raise
     return "_kb" not in store.columns
-
-
-def _has_bucket_dirs(spark, target: str) -> bool:
-    """True when ``target`` contains at least one ``_kb=<n>`` partition
-    directory — a pure namenode listing (no Spark job)."""
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(target)
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(path):
-        return False
-    return any(
-        st.isDirectory() and st.getPath().getName().startswith("_kb=")
-        for st in fs.listStatus(path)
-    )
-
-
-def prune_store_by_key(
-    store: DataFrame,
-    probe: DataFrame,
-    key,
-    n_buckets: int = N_KEY_BUCKETS,
-) -> DataFrame:
-    """Restrict a ``_kb``-bucketed store scan to the probe's key buckets
-    (PartitionFilters — files in untouched buckets are never opened). A
-    legacy flat store (no ``_kb`` column) passes through unpruned.
-    ``key`` is a column name or a list of them, present in BOTH frames
-    with identical semantics. The collect is bounded by ``n_buckets``
-    rows by construction."""
-    if "_kb" not in store.columns:
-        return store
-    buckets = [
-        r[0]
-        for r in probe.select(
-            key_bucket(*_key_cols(key), n_buckets=n_buckets).alias("_kb")
-        )
-        .distinct()
-        .collect()
-    ]
-    return store.filter(F.col("_kb").isin(buckets))

@@ -83,3 +83,29 @@ def test_timeout_null_mode(spark):
     got = {r["id"]: r["tag"] for r in out.collect()}
     assert got[5] is None
     assert all(got[i] == "ok" for i in range(8) if i != 5)
+
+
+@pytest.mark.parametrize("ordered", [True, False])
+def test_timeout_null_keeps_exact_long_results(spark, ordered):
+    """A timed-out row's NULL must not turn a ``long`` result column into
+    float64 for the rest of its batch: one partition, one timed-out row
+    and one ``2**62 + 1`` row, both emission orders."""
+    import asyncio
+
+    big = 2**62 + 1
+
+    async def lk(row):
+        if row["id"] == 0:
+            await asyncio.sleep(5.0)  # will exceed the timeout
+        return {"n": big, "flag": True}
+
+    out = async_lookup(
+        _df(spark, 2).coalesce(1),
+        lk,
+        "n long, flag boolean",
+        timeout_seconds=0.5,
+        ordered=ordered,
+        on_timeout="null",
+    )
+    got = {r["id"]: (r["n"], r["flag"]) for r in out.collect()}
+    assert got == {0: (None, None), 1: (big, True)}

@@ -142,3 +142,14 @@ def test_iterate_changed_col_and_converged_mutually_exclusive(spark):
             init, lambda s, i: s, 3,
             converged=lambda a, b: True, changed_col="_changed",
         )
+
+
+def test_iterate_changed_col_rejects_checkpoint_every(spark):
+    from flink_1_3_2_hopsworks_spark.operators.iterate import iterate
+
+    init = spark.range(1).select("id", F.lit(0).alias("v"))
+    with pytest.raises(ValueError, match="checkpoint_every"):
+        iterate(
+            init, lambda s, i: s.withColumn("_changed", F.lit(False)), 3,
+            checkpoint_every=2, changed_col="_changed",
+        )

@@ -258,17 +258,16 @@ def test_funnel_epoch_runs_one_signature_pass(spark, tmp_path):
     assert len(calls) == 1, f"expected ONE signature pass, got {len(calls)}"
 
 
-def test_bucketed_store_probe_prunes_files(spark, tmp_path):
-    """r11 store layout: epoch partitions are bucketed by the probe key,
-    so a small batch's probe reaches the scan as PartitionFilters and
-    skips every untouched bucket's files — probe I/O stops growing with
-    corpus lifetime. Quantified via input_file_name (post-pruning scanned
-    files), the ivf _cell test's methodology."""
+def test_store_epoch_writes_plain_files_with_kb_column(spark, tmp_path):
+    """r11 store layout: each epoch lands as plain files under
+    ``batch_id=N`` (no ``_kb=<n>`` directories, at most one file per
+    writing task), every row keeps its probe key's bucket as the ``_kb``
+    column, and the broadcast equality probe over the store finds
+    exactly the probed keys."""
     import pyspark.sql.functions as F
 
     from flink_1_3_2_hopsworks_spark.streaming.stores import (
         key_bucket,
-        prune_store_by_key,
         write_bucketed_partition,
     )
 
@@ -277,49 +276,33 @@ def test_bucketed_store_probe_prunes_files(spark, tmp_path):
         F.md5(F.col("id").cast("string")).alias("_fp"),
     )
     store_path = str(tmp_path / "store")
+    n_tasks = []
     for e in range(3):
-        write_bucketed_partition(
-            corpus.filter(F.col("doc_id") % 3 == e), store_path, e, "_fp"
-        )
+        epoch = corpus.filter(F.col("doc_id") % 3 == e)
+        n_tasks.append(epoch.rdd.getNumPartitions())
+        write_bucketed_partition(epoch, store_path, e, "_fp")
+    assert not glob.glob(f"{store_path}/*/_kb=*")
+    for e in range(3):
+        files = glob.glob(f"{store_path}/batch_id={e}/*.parquet")
+        assert 1 <= len(files) <= n_tasks[e], (e, len(files), n_tasks[e])
+
     store = spark.read.parquet(store_path)
-    n_disk_buckets = store.select("_kb").distinct().count()
-    assert n_disk_buckets > 30  # 2000 hashes spread over 64 buckets
+    assert "_kb" in store.columns
+    assert store.filter(F.col("_kb") != key_bucket(F.col("_fp"))).count() == 0
+    assert store.select("_kb").distinct().count() > 30  # 64 buckets
 
     probe = corpus.filter(F.col("doc_id") < 3).select("_fp")
-    pruned = prune_store_by_key(store, probe, "_fp")
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-    assert "_kb" in plan.split("PartitionFilters")[1][:300]
-
-    scanned = [
-        r[0] for r in pruned.select(F.input_file_name()).distinct().collect()
-    ]
-    touched = {f.split("_kb=")[1].split("/")[0] for f in scanned}
-    probe_kbs = {
-        str(r[0])
-        for r in probe.select(key_bucket(F.col("_fp"))).distinct().collect()
-    }
-    assert touched <= probe_kbs
-    assert len(touched) <= 3 < n_disk_buckets
-
-    # pruning is invisible to the probe's semantics
-    hits_full = sorted(
+    hits = sorted(
         r[0]
         for r in store.join(F.broadcast(probe), "_fp", "left_semi")
         .select("doc_id").collect()
     )
-    hits_pruned = sorted(
-        r[0]
-        for r in pruned.join(F.broadcast(probe), "_fp", "left_semi")
-        .select("doc_id").collect()
-    )
-    assert hits_full == hits_pruned and len(hits_full) == 3
+    assert hits == [0, 1, 2]
 
 
 def test_legacy_flat_fp_store_stays_flat_and_correct(spark, tmp_path):
-    """A pre-r11 flat fp store keeps its layout (mixed directory depths
-    break parquet partition discovery) and cross-epoch dedup still
-    works through the unpruned path."""
+    """A pre-r11 flat fp store keeps its layout (no ``_kb`` column — a
+    store must not mix two layouts) and cross-epoch dedup still works."""
     import pyspark.sql.functions as F
 
     from flink_1_3_2_hopsworks_spark.functions.text import fingerprint

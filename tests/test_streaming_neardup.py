@@ -276,16 +276,16 @@ def test_precomputed_batch_signatures_equivalent_and_single_pass(
     assert len(calls) == 1, f"expected ONE signature pass, got {len(calls)}"
 
 
-def test_posting_keys_path_matches_full_scan_and_prunes(spark, tmp_path):
+def test_posting_keys_path_matches_full_scan(spark, tmp_path):
     """r11 posting-key layout: (a) verdicts through corpus_keys are
-    IDENTICAL to the full signature-store scan; (b) a small batch's probe
-    prunes the keys scan to its own bucket dirs (PartitionFilters +
-    input_file_name, the ivf _cell methodology); (c) a keys store with a
-    different banding raises instead of silently missing duplicates."""
+    IDENTICAL to the full signature-store scan; (b) the store and its
+    keys sidecar are plain epoch files (no ``_kb=<n>`` directories, at
+    most one file per writing task) that keep ``_kb`` as a column; (c) a
+    keys store with a different banding raises instead of silently
+    missing duplicates."""
     import pytest
 
     from flink_1_3_2_hopsworks_spark.dedup.incremental import (
-        banded_bucket_keys,
         incremental_near_ingest,
         minhash_key_store,
         minhash_signature_store,
@@ -294,9 +294,6 @@ def test_posting_keys_path_matches_full_scan_and_prunes(spark, tmp_path):
         _read_keys_store,
         _read_store,
         seed_signature_store,
-    )
-    from flink_1_3_2_hopsworks_spark.streaming.stores import (
-        prune_store_by_key,
     )
 
     corpus = spark.createDataFrame(
@@ -325,22 +322,15 @@ def test_posting_keys_path_matches_full_scan_and_prunes(spark, tmp_path):
     got = {r["doc_id"]: r["reason"] for r in v_keys.collect()}
     assert got[1] == "corpus_near_dup" and got[3] == "kept"
 
-    # (b) pruning: the batch's banded keys touch few of the on-disk
-    # bucket dirs; the pruned scan opens only those.
-    sig = minhash_signature_store(batch, "doc_id", "text")
-    probe = banded_bucket_keys(
-        sig.withColumnRenamed("doc_id", "_id"), 64, 8, False
-    ).select("_band", "_bucket")
-    pruned = prune_store_by_key(keys, probe, ["_band", "_bucket"])
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-    assert "_kb" in plan.split("PartitionFilters")[1][:300]
-    n_disk = keys.select("_kb").distinct().count()
-    touched = {
-        r[0].split("_kb=")[1].split("/")[0]
-        for r in pruned.select(F.input_file_name()).distinct().collect()
-    }
-    assert len(touched) < n_disk, (len(touched), n_disk)
+    # (b) plain epoch files, _kb kept as a column
+    n_tasks = minhash_signature_store(
+        corpus, "doc_id", "text"
+    ).rdd.getNumPartitions()
+    for path in (store_path, f"{store_path}_keys"):
+        assert not glob.glob(f"{path}/*/_kb=*")
+        files = glob.glob(f"{path}/batch_id=-1/*.parquet")
+        assert 1 <= len(files) <= n_tasks, (path, len(files), n_tasks)
+    assert "_kb" in store.columns
 
     # (c) banding mismatch raises loudly
     bad_keys = minhash_key_store(
@@ -354,9 +344,9 @@ def test_posting_keys_path_matches_full_scan_and_prunes(spark, tmp_path):
 
 def test_empty_epoch_store_write_keeps_store_readable(spark, tmp_path):
     """An epoch with ZERO survivors (or an empty micro-batch) must not
-    poison the store: a dynamic partitionBy write of an empty frame
-    emits only _SUCCESS, so without the schema-bearing empty-file
-    fallback the NEXT epoch's whole-store read dies with
+    poison the store: the epoch write must still leave a schema-bearing
+    file (a dynamic partitionBy write of an empty frame emits only
+    _SUCCESS), or the NEXT epoch's whole-store read dies with
     UNABLE_TO_INFER_SCHEMA — not the missing-path condition — and the
     stream crashes permanently. Exercise the worst case (empty FIRST
     epoch) end-to-end through ingest_batch."""

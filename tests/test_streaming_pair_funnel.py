@@ -113,10 +113,12 @@ def test_pair_funnel_replay_counts_and_store_contents(spark, tmp_path):
     )
     assert near_ids == [1, 3, 13, 23]  # + image-near drop of 22
 
-    # r11 layouts actually on disk: bucketed partitions + the keys sidecar.
-    assert glob.glob(f"{base}/fp_store/batch_id=0/_kb=*")
-    assert glob.glob(f"{base}/sig_store_keys/batch_id=0/_kb=*")
-    assert glob.glob(f"{base}/img_near_store/batch_id=0/_kb=*")
+    # r11 layouts actually on disk: plain epoch files carrying _kb, plus
+    # the keys sidecar.
+    for store in ("fp_store", "sig_store_keys", "img_near_store"):
+        assert glob.glob(f"{base}/{store}/batch_id=0/*.parquet")
+        assert not glob.glob(f"{base}/{store}/*/_kb=*")
+        assert "_kb" in spark.read.parquet(f"{base}/{store}").columns
 
 
 def test_pair_funnel_stream_matches_sequential_replay(spark, tmp_path):
