@@ -206,12 +206,10 @@ def incremental_near_ingest(
     per stored (doc, band)). With it, the probe scans the slim keys
     table instead of the signatures, joins candidates against the
     broadcast batch keys, and fetches ONLY the candidate ids' signatures
-    from ``corpus`` for the estimator verify. The scans are not pruned
-    by key bucket: with 64 ``_kb`` buckets, a batch of a few hundred
-    keys touches all of them. Verdicts are identical to the store-only
-    path: bucket caps are computed over the whole keys table. The keys
-    store must match this call's hash family AND banding (its stamp
-    carries both; mismatch raises).
+    from ``corpus`` for the estimator verify. Verdicts are identical to
+    the store-only path: bucket caps are computed over the whole keys
+    table. The keys store must match this call's hash family AND banding
+    (its stamp carries both; mismatch raises).
     """
     from flink_1_3_2_hopsworks_spark.dedup.minhash import (
         _shingles,
@@ -490,9 +488,8 @@ def minhash_key_store(
     :func:`minhash_signature_store` frame with the SAME banding algebra the
     probe uses (:func:`banded_bucket_keys`), plus a stamp column carrying
     hash family AND banding. Persist each epoch's keys next to the signature
-    store (``<sig_store>_keys/batch_id=N``, via
-    streaming/stores.write_bucketed_partition on ``["_band", "_bucket"]``) —
-    a batch's probe then scans the slim keys instead of the signatures, and
+    store (``<sig_store>_keys/batch_id=N``, via streaming/stores.write_epoch)
+    — a batch's probe then scans the slim keys instead of the signatures, and
     the signature store is only touched for the candidates' ids (see
     incremental_near_ingest's ``corpus_keys``). A stamped ``signatures``
     frame (any :func:`minhash_signature_store` output since r7) must agree

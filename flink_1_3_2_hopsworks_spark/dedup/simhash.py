@@ -132,9 +132,9 @@ def simhash_chunk_keys(
     the chunk posting keys of a fingerprint frame, with THE same chunk
     algebra the probes use (:func:`_chunk`), so a persisted posting store
     and the probe can never drift. Persist each epoch (e.g. with
-    streaming/stores.write_bucketed_partition on ``["ci", "cv"]``) and
-    :func:`incremental_simhash_ingest` detects the layout by its columns,
-    probes the stored chunk rows directly, and caps buckets exactly."""
+    streaming/stores.write_epoch) and :func:`incremental_simhash_ingest`
+    detects the layout by its columns, probes the stored chunk rows
+    directly, and caps buckets exactly."""
     return fps.select(
         F.col(id_col),
         F.col(hash_col).alias("simhash"),
@@ -414,9 +414,7 @@ def incremental_simhash_ingest(
     rows, detected by its ``ci``/``cv`` columns) — the posting layout
     skips re-deriving the chunks of every stored fingerprint per probe;
     verdicts are identical (the same bucket caps, and an exactly-equal
-    stored hash is found through its ``ci = 0`` row). The scan is not
-    pruned by key bucket: with 64 ``_kb`` buckets, a batch of a few
-    hundred chunk keys touches all of them.
+    stored hash is found through its ``ci = 0`` row).
 
     Scale shape (mirrors the MinHash ingest exactly): the store — the
     100 TB side — is only ever SCANNED; its chunk rows stream through

@@ -101,6 +101,11 @@ def scatter_gather_iteration(
     ``vertices`` must have columns (id, <value_col>); ``edges`` (src, dst,
     ...edge attrs). Messages flow src→dst; symmetrize edges upstream for
     undirected semantics.
+
+    ``update`` must be deterministic (no ``rand()`` and the like): with
+    ``converge_on_value`` the change flag evaluates it a second time, so
+    a nondeterministic update could flag a change inconsistent with the
+    value it stores.
     """
     return _superstep_loop(
         vertices, edges, message, aggregate, update, value_col,
@@ -127,6 +132,9 @@ def gather_sum_apply_iteration(
     receiving side (the reference differs in where the UDF runs, not in
     the dataflow): gather ≡ the per-edge expression, sum ≡ the aggregate,
     apply ≡ the update. Kept as a separate spelling for API parity.
+
+    ``apply`` must be deterministic, for the same reason as
+    :func:`scatter_gather_iteration`'s ``update``.
     """
     return _superstep_loop(
         vertices, edges, gather, sum_agg, apply, value_col,

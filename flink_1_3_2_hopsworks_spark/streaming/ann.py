@@ -163,8 +163,8 @@ def compact_vector_store(
     ``batch_id < before_batch_id`` collapse into one consolidated
     ``batch_id=-1`` base partition, KEEPING ``cell_col`` as the inner
     partition column — the store's serving layout (``ivfpq_topk`` prunes
-    by cell directory) must survive compaction, so the generic
-    flat ``_kb`` rewrite does not apply here. One file per non-empty cell
+    by cell directory) must survive compaction, so the generic plain
+    rewrite does not apply here. One file per non-empty cell
     in the base (repartition on the cell before the partitioned write,
     the tasks×partitions tiny-file lesson), so the compacted history
     costs ≤ num_cells files regardless of how many epochs it replaces.
@@ -201,11 +201,4 @@ def compact_vector_store(
                 f"{target}/{cell_col}=0"
             )
 
-    return compact_store(
-        spark,
-        store_path,
-        key=None,  # unused: the writer owns the layout
-        before_batch_id=before_batch_id,
-        inner_col=cell_col,
-        writer=_writer,
-    )
+    return compact_store(spark, store_path, before_batch_id, writer=_writer)

@@ -65,8 +65,9 @@ from flink_1_3_2_hopsworks_spark.streaming.neardup import (
     compact_signature_store,
 )
 from flink_1_3_2_hopsworks_spark.streaming.stores import (
+    compact_store,
     compaction_due,
-    write_bucketed_partition,
+    write_epoch,
 )
 
 STAGES = ("input", "rules", "exact_dedup", "near_dedup")
@@ -80,13 +81,11 @@ def _default_rules(text_col: str) -> Column:
 
 def _read_fp_store(spark, fp_store_path: str, before_batch_id: int):
     """The fingerprint store's ``_fp`` column (epochs strictly before
-    ``before_batch_id``) plus its ``_kb`` column when the store has one (r11
-    layout; its absence marks a pre-r11 flat store, whose layout the epoch
-    write keeps), or ``None`` on the very first batch. Same visibility rules
-    as the signature store: a replayed epoch must not see its own
-    uncommitted append (every in-batch doc would flip to corpus-dup and the
-    partition would overwrite empty), and a non-epoch-partitioned store is
-    rejected loudly (_read_store's partition-discovery data-loss
+    ``before_batch_id``), or ``None`` on the very first batch. Same
+    visibility rules as the signature store: a replayed epoch must not see
+    its own uncommitted append (every in-batch doc would flip to corpus-dup
+    and the partition would overwrite empty), and a non-epoch-partitioned
+    store is rejected loudly (_read_store's partition-discovery data-loss
     rationale)."""
     store = _read_store(spark, fp_store_path, before_batch_id)
     if store is None:
@@ -96,8 +95,7 @@ def _read_fp_store(spark, fp_store_path: str, before_batch_id: int):
             f"fingerprint store at {fp_store_path!r} has no _fp column — "
             "stores are written by ingest_funnel_batch / seed_funnel_state."
         )
-    cols = ["_fp"] + (["_kb"] if "_kb" in store.columns else [])
-    return store.select(*cols)
+    return store.select("_fp")
 
 
 def seed_funnel_state(
@@ -114,21 +112,12 @@ def seed_funnel_state(
     """Seed both dedup stores with an EXISTING corpus before the stream
     starts: fingerprints and signatures land under the reserved
     ``batch_id=-1`` partitions (visible to every epoch, including epoch-0
-    crash replays reading ``batch_id < 0``), in the r11 layout with the
-    signature store's posting-key sidecar (``bands`` must match the
-    funnel's banding — the keys stamp enforces it). Re-seeding into an
-    EXISTING pre-r11 flat store preserves that store's flat layout, per
-    store, mirroring the epoch-append paths (a store must not mix two
-    layouts)."""
-    from flink_1_3_2_hopsworks_spark.streaming.stores import (
-        store_layout_is_flat,
-    )
-
-    spark = docs.sparkSession
-    write_bucketed_partition(
+    crash replays reading ``batch_id < 0``), with the signature store's
+    posting-key sidecar (``bands`` must match the funnel's banding — the
+    keys stamp enforces it)."""
+    write_epoch(
         docs.select(F.col(id_col), fingerprint(text_col).alias("_fp")),
-        fp_store_path, -1, "_fp",
-        legacy_flat=store_layout_is_flat(spark, fp_store_path),
+        fp_store_path, -1,
     )
     _write_store_epoch(
         minhash_signature_store(
@@ -138,7 +127,6 @@ def seed_funnel_state(
         -1, sig_store_path, id_col,
         shingle_k=shingle_k, num_hashes=num_hashes, bands=bands,
         portable=portable,
-        legacy_flat=store_layout_is_flat(spark, sig_store_path),
     )
 
 
@@ -151,17 +139,15 @@ def compact_funnel_stores(
 ) -> dict:
     """OFFLINE compaction of the text funnel's two dedup stores: epochs
     ``batch_id < before_batch_id`` of the fingerprint store collapse
-    into one ``_fp``-bucketed ``batch_id=-1`` base (stores.compact_store
-    — see its watermark/flat-store contract) and the signature store +
-    posting-key sidecar through ``compact_signature_store``. The funnel
+    into one ``batch_id=-1`` base (stores.compact_store — see its
+    watermark contract) and the signature store + posting-key sidecar
+    through ``compact_signature_store``. The funnel
     OUTPUT (the per-epoch funnel rows) is never compacted — its epoch
     attribution IS the result. Run between epochs, with
     ``before_batch_id`` at or below the stream's committed watermark.
     Returns ``{"fp": stats, "sig": stats}``."""
-    from flink_1_3_2_hopsworks_spark.streaming.stores import compact_store
-
     return {
-        "fp": compact_store(spark, fp_store_path, "_fp", before_batch_id),
+        "fp": compact_store(spark, fp_store_path, before_batch_id),
         "sig": compact_signature_store(
             spark, sig_store_path, before_batch_id, bands=bands
         ),
@@ -193,8 +179,8 @@ def curation_funnel_stream(
 
     ``compact_every=N`` makes the loop SELF-MAINTAINING: at the start of
     every Nth epoch the committed history (epochs ``< batch_id``) of both
-    stores collapses into one key-bucketed base
-    (:func:`compact_funnel_stores`), so crawl-lifetime file counts stay
+    stores collapses into one base (:func:`compact_funnel_stores`), so
+    crawl-lifetime file counts stay
     bounded without an offline job. Safe under crash replay: the
     compaction runs before the epoch's own writes, only ever folds
     committed epochs (the compact_store watermark contract), and is
@@ -294,8 +280,7 @@ def ingest_funnel_batch(
         if fp_store is not None:
             batch_keys = s1.select("_fp").distinct()
             collisions = (
-                fp_store.select("_fp")
-                .join(F.broadcast(batch_keys), "_fp", "left_semi")
+                fp_store.join(F.broadcast(batch_keys), "_fp", "left_semi")
                 .distinct()
             )
             s1_new = s1.join(F.broadcast(collisions), "_fp", "left_anti")
@@ -316,7 +301,6 @@ def ingest_funnel_batch(
         surv2 = batch.join(exact_keep.select(id_col), id_col)
         sig_store = _read_store(spark, sig_store_path, batch_id)
         sig_keys = _read_keys_store(spark, sig_store, sig_store_path, batch_id)
-        sig_legacy = sig_store is not None and "_kb" not in sig_store.columns
         if sig_store is None:
             sig_store = minhash_signature_store(
                 batch.limit(0), id_col, text_col,
@@ -392,14 +376,10 @@ def ingest_funnel_batch(
         # ---- exactly-once epoch writes (each overwrites its partition):
         # funnel rows, exact-stage survivor fingerprints, near-stage
         # survivor signatures ----
-        funnel.write.mode("overwrite").parquet(
-            f"{funnel_path}/batch_id={batch_id}"
-        )
-        write_bucketed_partition(
+        write_epoch(funnel, funnel_path, batch_id)
+        write_epoch(
             slim.join(exact_keep.select(id_col), id_col).select(_id, "_fp"),
-            fp_store_path, batch_id, "_fp",
-            # a pre-r11 flat store keeps its layout
-            legacy_flat=(fp_store is not None and "_kb" not in fp_store.columns),
+            fp_store_path, batch_id,
         )
         _write_store_epoch(
             sig2.join(
@@ -408,7 +388,7 @@ def ingest_funnel_batch(
             ),
             batch_id, sig_store_path, id_col,
             shingle_k=shingle_k, num_hashes=num_hashes, bands=bands,
-            portable=portable, legacy_flat=sig_legacy,
+            portable=portable,
         )
     finally:
         release_pin_scope(pins)

@@ -54,8 +54,9 @@ from flink_1_3_2_hopsworks_spark.multimodal.curation import decode_signals
 from flink_1_3_2_hopsworks_spark.operators.sampling import salted_h32
 from flink_1_3_2_hopsworks_spark.streaming.neardup import _read_store
 from flink_1_3_2_hopsworks_spark.streaming.stores import (
+    compact_store,
     compaction_due,
-    write_bucketed_partition,
+    write_epoch,
 )
 
 STAGES = (
@@ -76,26 +77,12 @@ def seed_media_funnel_state(
 ) -> None:
     """Seed both perceptual-fingerprint stores with an EXISTING media
     corpus before the stream starts (reserved ``batch_id=-1`` partitions,
-    visible to every epoch including epoch-0 crash replays). Re-seeding
-    into an EXISTING pre-r11 flat store preserves that store's flat
-    layout, per store, mirroring the epoch-append paths (a store must
-    not mix two layouts)."""
-    from flink_1_3_2_hopsworks_spark.streaming.stores import (
-        store_layout_is_flat,
-    )
-
-    spark = media.sparkSession
+    visible to every epoch including epoch-0 crash replays)."""
     fps = decode_signals(media, id_col, payload_col).filter(
         F.col("decoded")
     ).select(id_col, "simhash")
-    write_bucketed_partition(
-        fps, exact_store_path, -1, "simhash",
-        legacy_flat=store_layout_is_flat(spark, exact_store_path),
-    )
-    write_bucketed_partition(
-        simhash_chunk_keys(fps, id_col), near_store_path, -1, ["ci", "cv"],
-        legacy_flat=store_layout_is_flat(spark, near_store_path),
-    )
+    write_epoch(fps, exact_store_path, -1)
+    write_epoch(simhash_chunk_keys(fps, id_col), near_store_path, -1)
 
 
 def compact_media_funnel_stores(
@@ -105,21 +92,14 @@ def compact_media_funnel_stores(
     before_batch_id: int,
 ) -> dict:
     """OFFLINE compaction of the media funnel's two perceptual stores:
-    epochs ``batch_id < before_batch_id`` collapse into one key-bucketed
-    ``batch_id=-1`` base each — the exact store on its ``simhash`` probe
-    key, the chunk-posting near store on ``(ci, cv)``
-    (stores.compact_store — see its watermark/flat-store contract). Run
-    between epochs with ``before_batch_id`` at or below the committed
-    watermark. Returns ``{"exact": stats, "near": stats}``."""
-    from flink_1_3_2_hopsworks_spark.streaming.stores import compact_store
-
+    epochs ``batch_id < before_batch_id`` of the exact store and of the
+    chunk-posting near store collapse into one ``batch_id=-1`` base each
+    (stores.compact_store — see its watermark contract). Run between
+    epochs with ``before_batch_id`` at or below the committed watermark.
+    Returns ``{"exact": stats, "near": stats}``."""
     return {
-        "exact": compact_store(
-            spark, exact_store_path, "simhash", before_batch_id
-        ),
-        "near": compact_store(
-            spark, near_store_path, ["ci", "cv"], before_batch_id
-        ),
+        "exact": compact_store(spark, exact_store_path, before_batch_id),
+        "near": compact_store(spark, near_store_path, before_batch_id),
     }
 
 
@@ -145,7 +125,7 @@ def media_funnel_stream(
     ``funnel_path/batch_id=N`` and appends each perceptual stage's
     survivors to that stage's store. ``compact_every=N`` self-maintains
     the two stores: every Nth epoch folds the committed history into one
-    key-bucketed base before ingesting (crash-replay-safe — see
+    base before ingesting (crash-replay-safe — see
     curation_funnel_stream's note and stores.recover_compaction)."""
 
     def _process(batch: DataFrame, batch_id: int) -> None:
@@ -246,7 +226,6 @@ def ingest_media_funnel_batch(
             id_col, "simhash"
         )
         near_store = _read_store(spark, near_store_path, batch_id)
-        near_legacy = near_store is not None and "ci" not in near_store.columns
         if near_store is None:
             near_store = simhash_chunk_keys(surv3.limit(0), id_col)
         near = incremental_simhash_ingest(
@@ -298,30 +277,19 @@ def ingest_media_funnel_batch(
         funnel = wide.select(rows.alias("_r")).select("_r.*")
 
         # ---- exactly-once epoch writes ----
-        funnel.write.mode("overwrite").parquet(
-            f"{funnel_path}/batch_id={batch_id}"
-        )
-        write_bucketed_partition(
+        write_epoch(funnel, funnel_path, batch_id)
+        write_epoch(
             slim.join(exact_keep.select(id_col), id_col).select(
                 id_col, "simhash"
             ),
-            exact_store_path, batch_id, "simhash",
-            legacy_flat=(
-                exact_store is not None and "_kb" not in exact_store.columns
-            ),
+            exact_store_path, batch_id,
         )
         near_surv = slim.join(
             near.filter(F.col("_nd_ok")).select(id_col), id_col
         ).select(id_col, "simhash")
-        if near_legacy:
-            near_surv.write.mode("overwrite").parquet(
-                f"{near_store_path}/batch_id={batch_id}"
-            )
-        else:
-            write_bucketed_partition(
-                simhash_chunk_keys(near_surv, id_col),
-                near_store_path, batch_id, ["ci", "cv"],
-            )
+        write_epoch(
+            simhash_chunk_keys(near_surv, id_col), near_store_path, batch_id
+        )
     finally:
         release_pin_scope(pins)
         if near is not None:

@@ -46,7 +46,14 @@ from pyspark.sql.streaming import StreamingQuery
 
 from flink_1_3_2_hopsworks_spark.dedup.incremental import (
     incremental_near_ingest,
+    minhash_key_store,
     minhash_signature_store,
+)
+from flink_1_3_2_hopsworks_spark.streaming.stores import (
+    compact_store,
+    compaction_due,
+    store_epochs,
+    write_epoch,
 )
 
 
@@ -110,29 +117,15 @@ def seed_signature_store(
     num_hashes: int = 64,
     portable: bool = False,
     bands: int = 8,
-    legacy_flat: bool | None = None,
 ) -> None:
     """Seed the ingestion loop's store with an EXISTING corpus before the
     stream starts: signatures land under the reserved ``batch_id=-1``
     partition, visible to every epoch (and to epoch-0 crash replays,
-    which read ``batch_id < 0``). r11 layout: the rows carry their id's
-    ``_kb`` bucket, and the posting-key sidecar (``<store_path>_keys``)
-    gets the seed's (id, band, bucket) rows — so every later epoch's
-    probe reads the slim sidecar and fetches only its candidates'
-    signatures. ``bands`` must match the ingest loop's banding (the keys
-    stamp enforces it).
-
-    ``legacy_flat=None`` (default) mirrors the epoch-append paths:
-    re-seeding into an EXISTING pre-r11 flat store preserves its flat,
-    sidecar-less layout (a store must not mix two layouts); a missing or
-    r11 store seeds in the r11 layout. Pass an explicit bool to override
-    detection."""
-    from flink_1_3_2_hopsworks_spark.streaming.stores import (
-        store_layout_is_flat,
-    )
-
-    if legacy_flat is None:
-        legacy_flat = store_layout_is_flat(docs.sparkSession, store_path)
+    which read ``batch_id < 0``), and the posting-key sidecar
+    (``<store_path>_keys``) gets the seed's (id, band, bucket) rows — so
+    every later epoch's probe reads the slim sidecar and fetches only its
+    candidates' signatures. ``bands`` must match the ingest loop's
+    banding (the keys stamp enforces it)."""
     sig = minhash_signature_store(
         docs, id_col, text_col,
         shingle_k=shingle_k, num_hashes=num_hashes, portable=portable,
@@ -140,7 +133,7 @@ def seed_signature_store(
     _write_store_epoch(
         sig, -1, store_path, id_col,
         shingle_k=shingle_k, num_hashes=num_hashes, bands=bands,
-        portable=portable, legacy_flat=legacy_flat,
+        portable=portable,
     )
 
 
@@ -153,36 +146,21 @@ def _write_store_epoch(
     num_hashes: int,
     bands: int,
     portable: bool,
-    legacy_flat: bool,
 ) -> None:
-    """One epoch's store append in the r11 layout: the signature rows under
+    """One epoch's store append: the signature rows under
     ``store_path/batch_id=N``, plus the posting-key sidecar (same derivation
     as the probe — banded_bucket_keys via minhash_key_store) under
-    ``<store_path>_keys/batch_id=N``; both carry ``_kb``. Both writes
-    project the SAME ``sig_frame`` — the ingest loops pass a slice of their
-    pinned per-epoch signature frame, so the keys derivation is a cache
-    read, and store/keys coverage cannot diverge (both written or neither,
-    and a replayed epoch overwrites both partitions). ``legacy_flat``
-    preserves a pre-r11 store's flat, sidecar-less layout."""
-    from flink_1_3_2_hopsworks_spark.dedup.incremental import (
-        minhash_key_store,
-    )
-    from flink_1_3_2_hopsworks_spark.streaming.stores import (
-        write_bucketed_partition,
-    )
-
-    write_bucketed_partition(
-        sig_frame, store_path, batch_id, id_col, legacy_flat=legacy_flat
-    )
-    if legacy_flat:
-        return
+    ``<store_path>_keys/batch_id=N``. Both writes project the SAME
+    ``sig_frame`` — the ingest loops pass a slice of their pinned per-epoch
+    signature frame, so the keys derivation is a cache read, and store/keys
+    coverage cannot diverge (both written or neither, and a replayed epoch
+    overwrites both partitions)."""
+    write_epoch(sig_frame, store_path, batch_id)
     keys = minhash_key_store(
         sig_frame, id_col, shingle_k=shingle_k, num_hashes=num_hashes,
         bands=bands, portable=portable,
     )
-    write_bucketed_partition(
-        keys, f"{store_path}_keys", batch_id, ["_band", "_bucket"]
-    )
+    write_epoch(keys, f"{store_path}_keys", batch_id)
 
 
 def compact_signature_store(
@@ -194,12 +172,11 @@ def compact_signature_store(
 ) -> dict:
     """OFFLINE compaction of a MinHash signature store AND its
     posting-key sidecar: epochs ``batch_id < before_batch_id`` collapse
-    into one key-bucketed base partition each (see
-    ``stores.compact_store`` for the watermark/flat-store contract and
-    crash notes), and the sidecar's base is RE-DERIVED from the
-    compacted signatures with the store's own stamped hash family —
-    which is also what migrates a legacy flat store (never had a
-    sidecar) into the r11 layout in one call. ``bands``
+    into one base partition each (see ``stores.compact_store`` for the
+    watermark contract and crash notes), and the sidecar's base is
+    RE-DERIVED from the compacted signatures with the store's own stamped
+    hash family — so a store written without a sidecar comes out with
+    one covering the compacted history. ``bands``
     must match the ingest loop's banding; when a sidecar already
     exists, its stamp is checked against it (mismatch raises, same
     rationale as the probe-time check). Returns the signature store's
@@ -208,11 +185,6 @@ def compact_signature_store(
         _KEYS_STAMP_PREFIX,
         _STAMP_PREFIX,
         _keys_stamp,
-        minhash_key_store,
-    )
-    from flink_1_3_2_hopsworks_spark.streaming.stores import (
-        compact_store,
-        write_bucketed_partition,
     )
 
     # Parse the hash family from the store's stamp column BEFORE
@@ -246,51 +218,61 @@ def compact_signature_store(
                 "sidecar's own banding."
             )
 
-    stats = compact_store(spark, store_path, id_col, before_batch_id)
+    stats = compact_store(spark, store_path, before_batch_id)
 
     # Re-derive the sidecar base from the compacted signatures (exact —
     # same algebra as append time), then drop the old epoch partitions
     # it replaces. Doing it in this order keeps the sidecar a SUPERSET
     # of the store at every instant (a concurrent reader would at worst
-    # probe a few stale buckets, never miss one).
-    base_sig = (
-        spark.read.parquet(store_path)
-        .filter(F.col("batch_id") < before_batch_id)
-        .drop("batch_id", "_kb")
-    )
+    # probe a few stale buckets, never miss one). The store now has at
+    # most one epoch below ``before_batch_id`` (the base -1, or the one
+    # epoch a no-op compaction leaves); the sidecar base takes the same
+    # epoch id, so _read_keys_store sees full coverage.
+    base = [e for e in store_epochs(spark, store_path) if e < before_batch_id]
+    if not base:
+        return stats
+    (base_id,) = base
     keys = minhash_key_store(
-        base_sig, id_col, shingle_k=shingle_k, num_hashes=num_hashes,
-        bands=bands, portable=portable,
+        spark.read.parquet(f"{store_path}/batch_id={base_id}"), id_col,
+        shingle_k=shingle_k, num_hashes=num_hashes, bands=bands,
+        portable=portable,
     )
     tmp_root = f"{keys_path}/_compact_tmp"
-    write_bucketed_partition(
-        keys.coalesce(spark.sparkContext.defaultParallelism),
-        tmp_root, -1, ["_band", "_bucket"],
+    write_epoch(
+        keys.coalesce(spark.sparkContext.defaultParallelism), tmp_root,
+        base_id,
     )
-    if fs.exists(jvm.org.apache.hadoop.fs.Path(keys_path)):
-        for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(keys_path)):
-            name = st.getPath().getName()
-            if not (st.isDirectory() and name.startswith("batch_id=")):
-                continue
-            if int(name.split("=", 1)[1]) < before_batch_id:
-                fs.delete(st.getPath(), True)
+    for e in store_epochs(spark, keys_path):
+        if e < before_batch_id:
+            fs.delete(
+                jvm.org.apache.hadoop.fs.Path(f"{keys_path}/batch_id={e}"),
+                True,
+            )
     fs.rename(
-        jvm.org.apache.hadoop.fs.Path(f"{tmp_root}/batch_id=-1"),
-        jvm.org.apache.hadoop.fs.Path(f"{keys_path}/batch_id=-1"),
+        jvm.org.apache.hadoop.fs.Path(f"{tmp_root}/batch_id={base_id}"),
+        jvm.org.apache.hadoop.fs.Path(f"{keys_path}/batch_id={base_id}"),
     )
     fs.delete(jvm.org.apache.hadoop.fs.Path(tmp_root), True)
     return stats
 
 
 def _read_keys_store(spark, store, store_path: str, before_batch_id: int):
-    """The posting-key sidecar for an r11 signature store (epochs before
-    ``before_batch_id``), or ``None`` when the store is legacy (flat, no
-    ``_kb``, sidecar-less) — sound by construction: every r11 epoch
-    writes its sidecar in the same call, so an r11 store always has
-    matching keys coverage, while a legacy store never has any."""
-    if store is None or "_kb" not in store.columns:
+    """The posting-key sidecar ``<store_path>_keys`` of a signature store
+    (epochs before ``before_batch_id``), or ``None`` — the full-scan
+    probe — unless the sidecar has every store epoch the read sees. Every
+    epoch write lands both, so a store written by the ingest loops always
+    qualifies; a store written without a sidecar stays on the full scan,
+    also after later epochs add sidecar partitions of their own, until
+    ``compact_signature_store`` derives one for its whole history."""
+    if store is None:
         return None
-    return _read_store(spark, f"{store_path}_keys", before_batch_id)
+    keys_path = f"{store_path}_keys"
+    visible = {
+        e for e in store_epochs(spark, store_path) if e < before_batch_id
+    }
+    if not visible <= set(store_epochs(spark, keys_path)):
+        return None
+    return _read_store(spark, keys_path, before_batch_id)
 
 
 def near_ingest_stream(
@@ -321,15 +303,11 @@ def near_ingest_stream(
     """
 
     def _process(batch: DataFrame, batch_id: int) -> None:
-        from flink_1_3_2_hopsworks_spark.streaming.stores import (
-            compaction_due,
-        )
-
         if compaction_due(batch_id, compact_every):
             # Self-maintenance: fold the committed signature epochs (and
-            # the posting-key sidecar) into one key-bucketed base before
-            # this epoch runs — crash-replay-safe via the write-ahead
-            # manifest (stores.recover_compaction).
+            # the posting-key sidecar) into one base before this epoch
+            # runs — crash-replay-safe via the write-ahead manifest
+            # (stores.recover_compaction).
             compact_signature_store(
                 batch.sparkSession, store_path, batch_id, id_col=id_col,
                 bands=bands,
@@ -392,12 +370,10 @@ def ingest_batch(
     pins = push_pin_scope()
     try:
         store = _read_store(spark, store_path, batch_id)
-        # r11 layout: the store always has a posting-key sidecar
-        # (written in the same epoch call), so the probe scans the slim
-        # keys and fetches only the candidates' signatures; a legacy flat
-        # store stays on the full-scan path AND keeps its layout.
+        # The posting-key sidecar (written in the same epoch call) lets
+        # the probe scan the slim keys and fetch only the candidates'
+        # signatures.
         keys = _read_keys_store(spark, store, store_path, batch_id)
-        legacy = store is not None and "_kb" not in store.columns
         if store is None:
             # First batch: an empty store with the right schema so the
             # within-batch half still runs under the same code path.
@@ -422,9 +398,7 @@ def ingest_batch(
             portable=portable, batch_signatures=batch_sig,
             corpus_keys=keys,
         ).persist()
-        verdicts.write.mode("overwrite").parquet(
-            f"{verdict_path}/batch_id={batch_id}"
-        )
+        write_epoch(verdicts, verdict_path, batch_id)
         _write_store_epoch(
             batch_sig.join(
                 verdicts.filter(F.col("kept")).select(id_col), id_col,
@@ -432,7 +406,7 @@ def ingest_batch(
             ),
             batch_id, store_path, id_col,
             shingle_k=shingle_k, num_hashes=num_hashes, bands=bands,
-            portable=portable, legacy_flat=legacy,
+            portable=portable,
         )
     finally:
         release_pin_scope(pins)

@@ -65,10 +65,12 @@ from flink_1_3_2_hopsworks_spark.streaming.neardup import (
     _read_keys_store,
     _read_store,
     _write_store_epoch,
+    compact_signature_store,
 )
 from flink_1_3_2_hopsworks_spark.streaming.stores import (
+    compact_store,
     compaction_due,
-    write_bucketed_partition,
+    write_epoch,
 )
 
 STAGES = (
@@ -93,32 +95,23 @@ def compact_pair_funnel_stores(
     exact store (``simhash``), the caption MinHash signature store +
     posting-key sidecar (compact_signature_store), and the image
     chunk-posting near store (``(ci, cv)``) — each collapsing its
-    epochs ``batch_id < before_batch_id`` into one key-bucketed
-    ``batch_id=-1`` base (stores.compact_store — see its
-    watermark/flat-store contract). The per-epoch funnel OUTPUT under
+    epochs ``batch_id < before_batch_id`` into one ``batch_id=-1`` base
+    (stores.compact_store — see its watermark contract). The per-epoch
+    funnel OUTPUT under
     ``base_dir/funnel`` is never compacted — its epoch attribution IS
     the result. Run between epochs with ``before_batch_id`` at or
     below the committed watermark. Returns per-store stats keyed
     ``fp / img_exact / sig / img_near``."""
-    from flink_1_3_2_hopsworks_spark.streaming.neardup import (
-        compact_signature_store,
-    )
-    from flink_1_3_2_hopsworks_spark.streaming.stores import compact_store
-
     return {
-        "fp": compact_store(
-            spark, f"{base_dir}/fp_store", "_fp", before_batch_id
-        ),
+        "fp": compact_store(spark, f"{base_dir}/fp_store", before_batch_id),
         "img_exact": compact_store(
-            spark, f"{base_dir}/img_exact_store", "simhash",
-            before_batch_id,
+            spark, f"{base_dir}/img_exact_store", before_batch_id
         ),
         "sig": compact_signature_store(
             spark, f"{base_dir}/sig_store", before_batch_id, bands=bands
         ),
         "img_near": compact_store(
-            spark, f"{base_dir}/img_near_store", ["ci", "cv"],
-            before_batch_id,
+            spark, f"{base_dir}/img_near_store", before_batch_id
         ),
     }
 
@@ -280,7 +273,6 @@ def ingest_pair_funnel_batch(
         p4 = batch.join(img_keep.select(id_col), id_col)
         sstore = _read_store(spark, sig_store, batch_id)
         skeys = _read_keys_store(spark, sstore, sig_store, batch_id)
-        sig_legacy = sstore is not None and "_kb" not in sstore.columns
         if sstore is None:
             sstore = minhash_signature_store(
                 batch.limit(0), id_col, text_col,
@@ -304,15 +296,6 @@ def ingest_pair_funnel_batch(
             cnear.filter(F.col("_cn")).select(id_col), id_col
         ).select(id_col, "simhash")
         nstore = _read_store(spark, img_near_store, batch_id)
-        # Legacy guards, mirroring the media funnel's near store: a
-        # pre-existing PLAIN fingerprint store (no ci/cv chunk columns)
-        # keeps its row layout; a chunk store without _kb keeps its flat
-        # layout. Both flags read the ORIGINAL store — the synthesized
-        # empty frame below must not masquerade as a legacy layout.
-        near_plain_legacy = (
-            nstore is not None and "ci" not in nstore.columns
-        )
-        near_flat = nstore is not None and "_kb" not in nstore.columns
         if nstore is None:
             nstore = simhash_chunk_keys(p5.limit(0), id_col)
         inear = incremental_simhash_ingest(
@@ -377,21 +360,17 @@ def ingest_pair_funnel_batch(
 
         # ---- exactly-once epoch writes (each overwrites its partition):
         # funnel rows + each set-dependent stage's survivors to its own
-        # key-bucketed store ----
-        funnel.write.mode("overwrite").parquet(
-            f"{funnel_path}/batch_id={batch_id}"
-        )
-        write_bucketed_partition(
+        # store ----
+        write_epoch(funnel, funnel_path, batch_id)
+        write_epoch(
             slim.join(cap_keep.select(id_col), id_col).select(_id, "_fp"),
-            fp_store, batch_id, "_fp",
-            legacy_flat=(fstore is not None and "_kb" not in fstore.columns),
+            fp_store, batch_id,
         )
-        write_bucketed_partition(
+        write_epoch(
             slim.join(img_keep.select(id_col), id_col).select(
                 _id, "simhash"
             ),
-            img_exact_store, batch_id, "simhash",
-            legacy_flat=(istore is not None and "_kb" not in istore.columns),
+            img_exact_store, batch_id,
         )
         _write_store_epoch(
             sig2.join(
@@ -400,23 +379,14 @@ def ingest_pair_funnel_batch(
             ),
             batch_id, sig_store, id_col,
             shingle_k=shingle_k, num_hashes=num_hashes, bands=bands,
-            portable=portable, legacy_flat=sig_legacy,
+            portable=portable,
         )
         inear_surv = p5.join(
             inear.filter(F.col("_in")).select(id_col), id_col, "left_semi"
         )
-        if near_plain_legacy:
-            # pre-existing plain (id, simhash) store: append survivors in
-            # ITS row layout (chunk rows would schema-merge as nulls).
-            inear_surv.write.mode("overwrite").parquet(
-                f"{img_near_store}/batch_id={batch_id}"
-            )
-        else:
-            write_bucketed_partition(
-                simhash_chunk_keys(inear_surv, id_col),
-                img_near_store, batch_id, ["ci", "cv"],
-                legacy_flat=near_flat,
-            )
+        write_epoch(
+            simhash_chunk_keys(inear_surv, id_col), img_near_store, batch_id
+        )
     finally:
         release_pin_scope(pins)
         for frame in (inear, cnear, sig2, img_keep, cap_keep, slim):

@@ -1,60 +1,22 @@
 """Layout and compaction of the epoch-partitioned dedup stores.
 
-Each store epoch lands under ``store_path/batch_id=N`` as plain parquet
-files, at most one per writing task, and every row carries ``_kb``, the bucket
-of its probe key (``pmod(xxhash64(key...), 64)``), as an ordinary
-column. Reads filter ``batch_id < N``; the probes then run as broadcast
+Each store epoch is exactly the frame it was given, written under
+``store_path/batch_id=N`` as plain parquet files, at most one per writing
+task. Reads filter ``batch_id < N``; the probes then run as broadcast
 equality semi-joins of the batch's keys against the store scan.
-
-Stores are not pruned by key bucket. With 64 buckets, a batch of a few
-hundred distinct keys touches every bucket (past about 265 keys, fewer
-than one bucket is expected to stay untouched), so a bucket filter
-skips no file, while the ``_kb=<n>`` directories it needs cost a
-64-way shuffle and 64 files per epoch write, a bucket-list collect per
-probe, and a parallel partition-discovery job on every store read.
-``_kb`` stays a column so that a store written in the pre-r11 flat
-layout (no ``_kb``) can still be told apart and kept flat.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame
-
-N_KEY_BUCKETS = 64
+from pyspark.sql import DataFrame
 
 
-def key_bucket(*cols: Column, n_buckets: int = N_KEY_BUCKETS) -> Column:
-    """The store bucket of a probe key (single- or multi-column):
-    pmod(xxhash64(key...), n_buckets)."""
-    return F.pmod(F.xxhash64(*cols), F.lit(n_buckets)).cast("int")
-
-
-def _key_cols(key) -> list:
-    names = [key] if isinstance(key, str) else list(key)
-    return [F.col(n) for n in names]
-
-
-def write_bucketed_partition(
-    df: DataFrame,
-    store_path: str,
-    batch_id: int,
-    key,
-    legacy_flat: bool = False,
-    n_buckets: int = N_KEY_BUCKETS,
-) -> None:
-    """Overwrite ``store_path/batch_id=<batch_id>`` with ``df`` plus its
-    ``_kb = key_bucket(key...)`` column (``key`` is a column name or a
-    list of them): plain files, at most one per writing task. An empty
-    ``df`` still writes one schema-bearing file, so the next read of the
-    store can infer its schema. ``legacy_flat=True`` preserves a pre-r11
-    store's layout by leaving ``_kb`` out: without schema merging, the
-    read takes its schema from one file, so the columns of every epoch
-    must agree."""
-    if not legacy_flat:
-        df = df.withColumn(
-            "_kb", key_bucket(*_key_cols(key), n_buckets=n_buckets)
-        )
+def write_epoch(df: DataFrame, store_path: str, batch_id: int) -> None:
+    """Overwrite ``store_path/batch_id=<batch_id>`` with ``df``: plain
+    files, at most one per writing task. An empty ``df`` still writes one
+    schema-bearing file, so the next read of the store can infer its
+    schema."""
     df.write.mode("overwrite").parquet(f"{store_path}/batch_id={batch_id}")
 
 
@@ -62,6 +24,21 @@ def _fs(spark, path: str):
     jvm = spark._jvm
     jpath = jvm.org.apache.hadoop.fs.Path(path)
     return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
+
+
+def store_epochs(spark, store_path: str) -> list[int]:
+    """The sorted epoch ids N of the ``batch_id=N`` directories under
+    ``store_path`` (empty for a missing store). A namenode listing, no
+    Spark job."""
+    fs, root = _fs(spark, store_path)
+    if not fs.exists(root):
+        return []
+    return sorted(
+        int(st.getPath().getName().split("=", 1)[1])
+        for st in fs.listStatus(root)
+        if st.isDirectory()
+        and st.getPath().getName().startswith("batch_id=")
+    )
 
 
 def count_store_files(spark, store_path: str) -> int:
@@ -78,7 +55,7 @@ def count_store_files(spark, store_path: str) -> int:
         for st in fs.listStatus(stack.pop()):
             name = st.getPath().getName()
             # Spark's own discovery rule: _/. names are invisible UNLESS
-            # they are partition dirs (contain '='$) — _kb=3 counts.
+            # they are partition dirs (contain '=') — _cell=3 counts.
             if name.startswith(("_", ".")) and "=" not in name:
                 continue
             if st.isDirectory():
@@ -177,10 +154,7 @@ def recover_compaction(spark, store_path: str) -> dict | None:
 def compact_store(
     spark,
     store_path: str,
-    key,
     before_batch_id: int,
-    n_buckets: int = N_KEY_BUCKETS,
-    inner_col: str = "_kb",
     writer=None,
 ) -> dict:
     """OFFLINE compaction of an epoch-partitioned store: rewrite every
@@ -189,9 +163,10 @@ def compact_store(
     crawl-lifetime lever the per-epoch layout cannot provide. FILE COUNT
     (and with it partition discovery/listing cost on every store read)
     grows with every epoch; compaction resets it to at most one file
-    per core for the whole compacted history. Also the legacy-migration path: a
-    pre-r11 FLAT store comes out with the ``_kb`` column (rows otherwise
-    unchanged), like any r11 store.
+    per core for the whole compacted history. A store family with its own
+    inner layout (the ANN code stores' ``_cell``) passes ``writer``,
+    which must land the consolidated base under
+    ``<tmp_root>/batch_id=-1`` at the store's regular depth.
 
     Correctness contract (the caller's side):
     - ``before_batch_id`` must not exceed the stream's COMMITTED
@@ -199,9 +174,6 @@ def compact_store(
       filter ``batch_id < N`` and −1 < N), so folding a not-yet-committed
       epoch into it would let that epoch's crash replay see its own
       append and drop every document as a corpus dup.
-    - A FLAT store must be compacted in full (every epoch <
-      ``before_batch_id``): a ``_kb`` base next to remaining flat
-      epochs would mix two layouts in one store. Raises otherwise.
     - Verdict equivalence is exact: reads only ever filter
       ``batch_id < N``, and every compacted row keeps its columns —
       only its epoch attribution collapses to −1 (pytest-pinned against
@@ -230,29 +202,12 @@ def compact_store(
             f"store at {store_path!r} is not epoch-partitioned (no "
             "batch_id partition column) — nothing to compact."
         )
-    # ``inner_col`` names the store family's inner partition column
-    # (``_kb`` for the key-bucketed dedup stores, ``_cell`` for the ANN
-    # code stores) — its absence marks a legacy FLAT store, which must
-    # compact in full (a store must not mix two layouts).
-    flat = inner_col not in store.columns
-    fs, root = _fs(spark, store_path)
-    epochs = sorted(
-        int(st.getPath().getName().split("=", 1)[1])
-        for st in fs.listStatus(root)
-        if st.isDirectory()
-        and st.getPath().getName().startswith("batch_id=")
-    )
-    todo = [e for e in epochs if e < before_batch_id]
-    if flat and len(todo) < len(epochs):
-        raise ValueError(
-            f"flat store at {store_path!r} must be compacted in full: "
-            f"epochs {sorted(set(epochs) - set(todo))} are >= "
-            f"before_batch_id={before_batch_id}, and a base in the new "
-            "layout next to flat epochs mixes two layouts in one store."
-        )
+    todo = [
+        e for e in store_epochs(spark, store_path) if e < before_batch_id
+    ]
     files_before = count_store_files(spark, store_path)
-    if len(todo) < 2 and not flat:
-        # nothing to consolidate (0 or 1 bucketed epochs) — no-op
+    if len(todo) < 2:
+        # nothing to consolidate (0 or 1 epochs) — no-op
         return {
             "epochs_compacted": 0, "rows": 0,
             "files_before": files_before, "files_after": files_before,
@@ -262,21 +217,15 @@ def compact_store(
     )
     tmp_root = f"{store_path}/_compact_tmp"
     if writer is not None:
-        # store families with their own inner layout (e.g. the ANN code
-        # stores' ``_cell``) write the consolidated base themselves; the
-        # base keeps ``inner_col`` as a regular column (the writer
-        # re-partitions on it) and the writer MUST land the result under
-        # ``<tmp_root>/batch_id=-1`` at the store's regular depth.
         writer(base, tmp_root)
     else:
         # at most one file per core, however many epochs fold in
-        write_bucketed_partition(
-            base.drop(inner_col).coalesce(
-                spark.sparkContext.defaultParallelism
-            ),
-            tmp_root, -1, key, n_buckets=n_buckets,
+        write_epoch(
+            base.coalesce(spark.sparkContext.defaultParallelism),
+            tmp_root, -1,
         )
     rows = spark.read.parquet(f"{tmp_root}/batch_id=-1").count()
+    fs, _ = _fs(spark, store_path)
     jvm = spark._jvm
     # Point of no return: the manifest commits the delete set AFTER the
     # base is fully written — from here a crash recovers forward.
@@ -300,26 +249,3 @@ def compact_store(
         "files_after": count_store_files(spark, store_path),
     }
 
-
-def store_layout_is_flat(spark, store_path: str) -> bool:
-    """True when an EXISTING store at ``store_path`` was written in the
-    pre-r11 flat layout (no ``_kb`` column). The seed functions use this
-    to preserve a legacy store's layout when re-seeding ``batch_id=-1``
-    into it — the read takes its schema from one file, so a store that
-    mixes epochs with and without ``_kb`` would read as either layout. A
-    missing store reads as not-flat: fresh stores take the ``_kb``
-    layout. Any error other than the missing-path condition propagates
-    (same rationale as ``_is_path_not_found``)."""
-    from pyspark.errors import AnalysisException
-
-    from flink_1_3_2_hopsworks_spark.streaming.neardup import (
-        _is_path_not_found,
-    )
-
-    try:
-        store = spark.read.parquet(store_path)
-    except AnalysisException as e:
-        if _is_path_not_found(e):
-            return False
-        raise
-    return "_kb" not in store.columns

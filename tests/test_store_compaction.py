@@ -1,16 +1,15 @@
-"""Offline store compaction / legacy migration (streaming/stores.py
-``compact_store`` + streaming/neardup.py ``compact_signature_store``):
-epochs ``[*, N)`` collapse into one key-bucketed ``batch_id=-1`` base —
-verdict equivalence against the uncompacted twin, file-count reduction
-(the crawl-lifetime listing-cost lever), flat-store migration into the
-pruned r11 layout, and the partial-flat-compaction refusal."""
+"""Offline store compaction (streaming/stores.py ``compact_store`` +
+streaming/neardup.py ``compact_signature_store``): epochs ``[*, N)``
+collapse into one ``batch_id=-1`` base — verdict equivalence against the
+uncompacted twin, file-count reduction (the crawl-lifetime listing-cost
+lever), and the posting-key sidecar derived for a signature store
+written without one."""
 
 from __future__ import annotations
 
 import shutil
 
 import pyspark.sql.functions as F
-import pytest
 
 BASE = "the quick brown fox jumps over the lazy dog again and again"
 FRESH = "fresh unseen content one two three four five six"
@@ -98,11 +97,12 @@ def test_compacted_store_verdict_equivalent_and_fewer_files(
     assert got == {41: "corpus_near_dup", 42: "kept"}
 
 
-def test_flat_store_migrates_to_bucketed_with_sidecar(spark, tmp_path):
-    """Legacy migration: a pre-r11 FLAT signature store (no _kb, no
-    posting-key sidecar) compacts into the fully pruned r11 layout —
-    bucketed base + re-derived sidecar — with identical verdicts; a
-    PARTIAL flat compaction is refused (mixed directory depths)."""
+def test_sidecar_less_store_gets_sidecar_on_compaction(spark, tmp_path):
+    """A signature store written without a posting-key sidecar takes the
+    full-scan probe, also once a later epoch has written a sidecar of its
+    own (that sidecar misses the older epochs' candidates);
+    compact_signature_store derives the sidecar for the compacted
+    history, and the sidecar probe then gives the same verdicts."""
     import os
 
     from flink_1_3_2_hopsworks_spark.dedup.incremental import (
@@ -115,43 +115,50 @@ def test_flat_store_migrates_to_bucketed_with_sidecar(spark, tmp_path):
         _write_store_epoch,
         compact_signature_store,
     )
+    from flink_1_3_2_hopsworks_spark.streaming.stores import write_epoch
 
-    store = str(tmp_path / "flat_store")
+    store = str(tmp_path / "store")
     for e, rows in enumerate(EPOCHS):
-        _write_store_epoch(
+        write_epoch(
             minhash_signature_store(
                 spark.createDataFrame(rows, "doc_id long, text string"),
                 "doc_id", "text",
             ),
-            e, store, "doc_id",
-            shingle_k=5, num_hashes=64, bands=8, portable=False,
-            legacy_flat=True,
+            store, e,
         )
     assert not os.path.exists(f"{store}_keys")
+    full = _read_store(spark, store, 3)
+    assert _read_keys_store(spark, full, store, 3) is None
     batch = spark.createDataFrame(PROBE, "doc_id long, text string")
     pre = sorted(
         map(
             tuple,
-            incremental_near_ingest(
-                batch, _read_store(spark, store, 3), "doc_id", "text"
-            ).collect(),
+            incremental_near_ingest(batch, full, "doc_id", "text").collect(),
         )
     )
 
-    with pytest.raises(ValueError, match="compacted in full"):
-        compact_signature_store(spark, store, 2)
+    _write_store_epoch(
+        minhash_signature_store(
+            spark.createDataFrame([(41, NOVEL)], "doc_id long, text string"),
+            "doc_id", "text",
+        ),
+        3, store, "doc_id",
+        shingle_k=5, num_hashes=64, bands=8, portable=False,
+    )
+    later = _read_store(spark, store, 4)
+    assert _read_keys_store(spark, later, store, 4) is None
 
     compact_signature_store(spark, store, 3)
-    migrated = _read_store(spark, store, 3)
-    assert "_kb" in migrated.columns
-    keys = _read_keys_store(spark, migrated, store, 3)
-    assert keys is not None and "_kb" in keys.columns
+    compacted = _read_store(spark, store, 3)
+    assert compacted.columns == full.columns
+    keys = _read_keys_store(spark, compacted, store, 3)
+    assert keys is not None
 
     post = sorted(
         map(
             tuple,
             incremental_near_ingest(
-                batch, migrated, "doc_id", "text", corpus_keys=keys
+                batch, compacted, "doc_id", "text", corpus_keys=keys
             ).collect(),
         )
     )
@@ -163,7 +170,7 @@ def test_generic_chunk_store_compaction(spark, tmp_path):
     bit-for-bit and the file count collapses."""
     from flink_1_3_2_hopsworks_spark.streaming.stores import (
         compact_store,
-        write_bucketed_partition,
+        write_epoch,
     )
 
     store = str(tmp_path / "chunks")
@@ -174,9 +181,9 @@ def test_generic_chunk_store_compaction(spark, tmp_path):
             "simhash long, ci int, cv long",
         )
         rows += [tuple(r) for r in df.collect()]
-        write_bucketed_partition(df, store, e, ["ci", "cv"])
+        write_epoch(df, store, e)
 
-    stats = compact_store(spark, store, ["ci", "cv"], 4)
+    stats = compact_store(spark, store, 4)
     assert stats["epochs_compacted"] == 4
     assert stats["rows"] == len(rows)
     assert stats["files_after"] < stats["files_before"]
@@ -374,11 +381,14 @@ def test_auto_compaction_epoch_replay_idempotent(spark, tmp_path):
             map(
                 tuple,
                 spark.read.parquet(f"{base}/{store}")
-                .drop("batch_id", "_kb")
+                .drop("batch_id")
                 .collect(),
             )
         )
 
+    assert spark.read.parquet(f"{base}/fp_store").columns == [
+        "doc_id", "_fp", "batch_id",
+    ]
     fp_before = _store_rows("fp_store")
     sig_before = _store_rows("sig_store")
     # replay epoch 2 exactly as the foreachBatch body would
@@ -404,9 +414,7 @@ def test_auto_compaction_epoch_replay_idempotent(spark, tmp_path):
 
 
 def _generic_store(spark, path, n_epochs=3):
-    from flink_1_3_2_hopsworks_spark.streaming.stores import (
-        write_bucketed_partition,
-    )
+    from flink_1_3_2_hopsworks_spark.streaming.stores import write_epoch
 
     rows = []
     for e in range(n_epochs):
@@ -414,7 +422,7 @@ def _generic_store(spark, path, n_epochs=3):
             [(e * 10 + i, f"v{e}_{i}") for i in range(4)],
             "k long, v string",
         )
-        write_bucketed_partition(df, path, e, "k")
+        write_epoch(df, path, e)
         rows += [(e * 10 + i, f"v{e}_{i}") for i in range(4)]
     return sorted(rows)
 
@@ -436,7 +444,7 @@ def test_compaction_recovery_after_partial_deletes(spark, tmp_path):
     from flink_1_3_2_hopsworks_spark.streaming.stores import (
         _write_compact_manifest,
         compact_store,
-        write_bucketed_partition,
+        write_epoch,
     )
 
     store = str(tmp_path / "s")
@@ -444,12 +452,12 @@ def test_compaction_recovery_after_partial_deletes(spark, tmp_path):
     # simulate the crashed run: consolidated base fully under tmp,
     # manifest committed, then a crash mid-deletes (epochs 0-1 gone)
     base = spark.read.parquet(store).select("k", "v")
-    write_bucketed_partition(base, f"{store}/_compact_tmp", -1, "k")
+    write_epoch(base, f"{store}/_compact_tmp", -1)
     _write_compact_manifest(spark, store, [0, 1, 2])
     shutil.rmtree(f"{store}/batch_id=0")
     shutil.rmtree(f"{store}/batch_id=1")
     # the next compact_store call on this path must recover FIRST
-    stats = compact_store(spark, store, "k", 3)
+    stats = compact_store(spark, store, 3)
     assert _store_content(spark, store) == expected
     back = spark.read.parquet(store)
     assert {r[0] for r in back.select("batch_id").distinct().collect()} == {
@@ -467,14 +475,14 @@ def test_compaction_recovery_after_rename(spark, tmp_path):
 
     from flink_1_3_2_hopsworks_spark.streaming.stores import (
         recover_compaction,
-        write_bucketed_partition,
+        write_epoch,
     )
 
     store = str(tmp_path / "s")
     df = spark.createDataFrame(
         [(i, f"v{i}") for i in range(6)], "k long, v string"
     )
-    write_bucketed_partition(df, store, -1, "k")
+    write_epoch(df, store, -1)
     expected = _store_content(spark, store)
     with open(f"{store}/_compact_manifest.json", "w") as f:
         json.dump({"todo": [0, 1, -1]}, f)

@@ -258,18 +258,15 @@ def test_funnel_epoch_runs_one_signature_pass(spark, tmp_path):
     assert len(calls) == 1, f"expected ONE signature pass, got {len(calls)}"
 
 
-def test_store_epoch_writes_plain_files_with_kb_column(spark, tmp_path):
-    """r11 store layout: each epoch lands as plain files under
-    ``batch_id=N`` (no ``_kb=<n>`` directories, at most one file per
-    writing task), every row keeps its probe key's bucket as the ``_kb``
-    column, and the broadcast equality probe over the store finds
+def test_store_epoch_writes_exactly_the_given_frame(spark, tmp_path):
+    """Store layout: each epoch lands as plain files under ``batch_id=N``
+    (no inner partition directories, at most one file per writing task),
+    the store's columns are exactly the written frame's plus
+    ``batch_id``, and the broadcast equality probe over the store finds
     exactly the probed keys."""
     import pyspark.sql.functions as F
 
-    from flink_1_3_2_hopsworks_spark.streaming.stores import (
-        key_bucket,
-        write_bucketed_partition,
-    )
+    from flink_1_3_2_hopsworks_spark.streaming.stores import write_epoch
 
     corpus = spark.range(0, 2000).select(
         F.col("id").alias("doc_id"),
@@ -280,16 +277,15 @@ def test_store_epoch_writes_plain_files_with_kb_column(spark, tmp_path):
     for e in range(3):
         epoch = corpus.filter(F.col("doc_id") % 3 == e)
         n_tasks.append(epoch.rdd.getNumPartitions())
-        write_bucketed_partition(epoch, store_path, e, "_fp")
-    assert not glob.glob(f"{store_path}/*/_kb=*")
+        write_epoch(epoch, store_path, e)
+    assert not glob.glob(f"{store_path}/*/*=*")
     for e in range(3):
         files = glob.glob(f"{store_path}/batch_id={e}/*.parquet")
         assert 1 <= len(files) <= n_tasks[e], (e, len(files), n_tasks[e])
 
     store = spark.read.parquet(store_path)
-    assert "_kb" in store.columns
-    assert store.filter(F.col("_kb") != key_bucket(F.col("_fp"))).count() == 0
-    assert store.select("_kb").distinct().count() > 30  # 64 buckets
+    assert store.columns == corpus.columns + ["batch_id"]
+    assert store.count() == corpus.count()
 
     probe = corpus.filter(F.col("doc_id") < 3).select("_fp")
     hits = sorted(
@@ -300,9 +296,10 @@ def test_store_epoch_writes_plain_files_with_kb_column(spark, tmp_path):
     assert hits == [0, 1, 2]
 
 
-def test_legacy_flat_fp_store_stays_flat_and_correct(spark, tmp_path):
-    """A pre-r11 flat fp store keeps its layout (no ``_kb`` column — a
-    store must not mix two layouts) and cross-epoch dedup still works."""
+def test_exact_dedup_against_plain_written_fp_store(spark, tmp_path):
+    """An fp store seeded by a plain parquet write under ``batch_id=-1``
+    (not through seed_funnel_state) serves cross-epoch exact dedup, and
+    the epoch append keeps the store's columns."""
     import pyspark.sql.functions as F
 
     from flink_1_3_2_hopsworks_spark.functions.text import fingerprint
@@ -314,14 +311,14 @@ def test_legacy_flat_fp_store_stays_flat_and_correct(spark, tmp_path):
     fp_store = str(tmp_path / "fp_store")
     sig_store = str(tmp_path / "sig_store")
     funnel = str(tmp_path / "funnel")
-    # legacy seed: flat (no _kb), the pre-r11 writer's layout
+    # seed written by hand, not through the stores module
     frames[0].select(
         F.col("doc_id"), fingerprint("text").alias("_fp")
     ).write.mode("overwrite").parquet(f"{fp_store}/batch_id=-1")
 
     ingest_funnel_batch(frames[1], 0, fp_store, sig_store, funnel)
     store = spark.read.parquet(fp_store)
-    assert "_kb" not in store.columns  # layout preserved
+    assert store.columns == ["doc_id", "_fp", "batch_id"]
     # doc 11 (BASE) is an exact dup of the seeded epoch-0 survivor text
     n = {r["stage"]: r["n_docs"]
          for r in spark.read.parquet(funnel).collect()}

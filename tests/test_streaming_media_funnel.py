@@ -158,18 +158,16 @@ def test_media_funnel_seeded_stores_visible(spark, tmp_path):
 
 
 def test_chunk_posting_store_matches_plain(spark, tmp_path):
-    """r11 chunk-posting layout: verdicts through the (ci, cv)-exploded
+    """Chunk-posting layout: verdicts through the (ci, cv)-exploded
     near store are IDENTICAL to the plain fingerprint-table scan,
     including the Hamming-0 equality arm (an equal stored hash is found
-    through its chunk-0 row), and the store is plain epoch files that
-    keep ``_kb`` as a column."""
+    through its chunk-0 row), and the store is plain epoch files whose
+    columns are exactly the written frame's."""
     from flink_1_3_2_hopsworks_spark.dedup.simhash import (
         incremental_simhash_ingest,
         simhash_chunk_keys,
     )
-    from flink_1_3_2_hopsworks_spark.streaming.stores import (
-        write_bucketed_partition,
-    )
+    from flink_1_3_2_hopsworks_spark.streaming.stores import write_epoch
 
     store_plain = spark.createDataFrame(
         [(1000 + i, (i * 2654435761) % (1 << 63)) for i in range(300)]
@@ -177,11 +175,10 @@ def test_chunk_posting_store_matches_plain(spark, tmp_path):
         "doc_id long, simhash long",
     )
     path = str(tmp_path / "near_store")
-    write_bucketed_partition(
-        simhash_chunk_keys(store_plain, "doc_id"), path, -1, ["ci", "cv"]
-    )
+    posted = simhash_chunk_keys(store_plain, "doc_id")
+    write_epoch(posted, path, -1)
     store_posted = spark.read.parquet(path)
-    assert {"ci", "cv", "_kb"} <= set(store_posted.columns)
+    assert store_posted.columns == posted.columns + ["batch_id"]
 
     batch = spark.createDataFrame(
         [(1, 0), (2, 1), (3, (123 * 2654435761) % (1 << 63)),
@@ -201,8 +198,8 @@ def test_chunk_posting_store_matches_plain(spark, tmp_path):
         3: "corpus_near_dup", 4: "kept",
     }
 
-    # plain epoch files, _kb kept as a column
-    assert not glob.glob(f"{path}/*/_kb=*")
+    # plain epoch files, no inner partition directories
+    assert not glob.glob(f"{path}/*/*=*")
     files = glob.glob(f"{path}/batch_id=-1/*.parquet")
-    n_tasks = simhash_chunk_keys(store_plain, "doc_id").rdd.getNumPartitions()
+    n_tasks = posted.rdd.getNumPartitions()
     assert 1 <= len(files) <= n_tasks, (len(files), n_tasks)

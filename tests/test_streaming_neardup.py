@@ -277,12 +277,12 @@ def test_precomputed_batch_signatures_equivalent_and_single_pass(
 
 
 def test_posting_keys_path_matches_full_scan(spark, tmp_path):
-    """r11 posting-key layout: (a) verdicts through corpus_keys are
-    IDENTICAL to the full signature-store scan; (b) the store and its
-    keys sidecar are plain epoch files (no ``_kb=<n>`` directories, at
-    most one file per writing task) that keep ``_kb`` as a column; (c) a
-    keys store with a different banding raises instead of silently
-    missing duplicates."""
+    """Posting-key layout: (a) verdicts through corpus_keys are
+    IDENTICAL to the full signature-store scan; (b) a fresh seed writes
+    the store AND its ``<store>_keys`` sidecar as plain epoch files (no
+    inner partition directories, at most one file per writing task)
+    whose columns are exactly the written frames'; (c) a keys store with
+    a different banding raises instead of silently missing duplicates."""
     import pytest
 
     from flink_1_3_2_hopsworks_spark.dedup.incremental import (
@@ -306,7 +306,7 @@ def test_posting_keys_path_matches_full_scan(spark, tmp_path):
     seed_signature_store(corpus, store_path)
     store = _read_store(spark, store_path, 0)
     keys = _read_keys_store(spark, store, store_path, 0)
-    assert keys is not None and "_kb" in keys.columns
+    assert keys is not None
 
     batch = spark.createDataFrame(
         [(1, BASE), (2, BASE), (3, FRESH), (4, NOVEL)],
@@ -322,15 +322,17 @@ def test_posting_keys_path_matches_full_scan(spark, tmp_path):
     got = {r["doc_id"]: r["reason"] for r in v_keys.collect()}
     assert got[1] == "corpus_near_dup" and got[3] == "kept"
 
-    # (b) plain epoch files, _kb kept as a column
-    n_tasks = minhash_signature_store(
-        corpus, "doc_id", "text"
-    ).rdd.getNumPartitions()
+    # (b) plain epoch files holding exactly the written frames
+    sig = minhash_signature_store(corpus, "doc_id", "text")
+    n_tasks = sig.rdd.getNumPartitions()
     for path in (store_path, f"{store_path}_keys"):
-        assert not glob.glob(f"{path}/*/_kb=*")
+        assert not glob.glob(f"{path}/*/*=*")
         files = glob.glob(f"{path}/batch_id=-1/*.parquet")
         assert 1 <= len(files) <= n_tasks, (path, len(files), n_tasks)
-    assert "_kb" in store.columns
+    assert store.columns == sig.columns + ["batch_id"]
+    assert keys.columns == minhash_key_store(
+        sig, "doc_id", shingle_k=5, num_hashes=64, bands=8,
+    ).columns + ["batch_id"]
 
     # (c) banding mismatch raises loudly
     bad_keys = minhash_key_store(
@@ -372,48 +374,6 @@ def test_empty_epoch_store_write_keeps_store_readable(spark, tmp_path):
     back = spark.read.parquet(store)
     assert back.filter("batch_id = 0").count() == 0
     assert back.filter("batch_id = 1").count() == 1
-
-
-def test_reseed_into_flat_store_preserves_layout(spark, tmp_path):
-    """Re-seeding batch_id=-1 into an EXISTING pre-r11 FLAT store must
-    keep the flat layout (a bucketed seed partition would mix directory
-    depths and break parquet partition discovery for the whole store) —
-    and must not create a posting-key sidecar the flat epochs lack."""
-    import os
-
-    from flink_1_3_2_hopsworks_spark.dedup.incremental import (
-        minhash_signature_store,
-    )
-    from flink_1_3_2_hopsworks_spark.streaming.neardup import (
-        _write_store_epoch,
-        seed_signature_store,
-    )
-
-    store = str(tmp_path / "store")
-    legacy_docs = spark.createDataFrame(
-        [(10, OTHER)], "doc_id long, text string"
-    )
-    _write_store_epoch(
-        minhash_signature_store(legacy_docs, "doc_id", "text"),
-        0, store, "doc_id",
-        shingle_k=5, num_hashes=64, bands=8, portable=False,
-        legacy_flat=True,
-    )
-    seed_docs = spark.createDataFrame(
-        [(1, BASE), (2, FRESH)], "doc_id long, text string"
-    )
-    seed_signature_store(seed_docs, store)  # auto-detects the flat layout
-    back = spark.read.parquet(store)  # mixed depths would raise here
-    assert "_kb" not in back.columns
-    assert {r["batch_id"] for r in back.select("batch_id").collect()} == {
-        -1, 0,
-    }
-    assert not os.path.exists(f"{store}_keys")
-    # a FRESH path still seeds bucketed, with the sidecar
-    fresh = str(tmp_path / "fresh_store")
-    seed_signature_store(seed_docs, fresh)
-    assert "_kb" in spark.read.parquet(fresh).columns
-    assert os.path.exists(f"{fresh}_keys")
 
 
 def test_many_epoch_replay_releases_checkpoint_blocks(spark, tmp_path):

@@ -1,5 +1,5 @@
 """Streaming paired-curation funnel (streaming/pair_funnel.py): the
-foreachBatch loop over FOUR key-bucketed dedup stores — stream matches
+foreachBatch loop over FOUR dedup stores — stream matches
 sequential replay, joint cross-modal drops per epoch, per-stage store
 contents, and crash-replay idempotency."""
 
@@ -113,12 +113,26 @@ def test_pair_funnel_replay_counts_and_store_contents(spark, tmp_path):
     )
     assert near_ids == [1, 3, 13, 23]  # + image-near drop of 22
 
-    # r11 layouts actually on disk: plain epoch files carrying _kb, plus
-    # the keys sidecar.
-    for store in ("fp_store", "sig_store_keys", "img_near_store"):
+    # The layouts actually on disk: plain epoch files whose columns are
+    # exactly the written frames', plus the keys sidecar.
+    from flink_1_3_2_hopsworks_spark.dedup.incremental import (
+        _KEYS_STAMP_PREFIX,
+    )
+
+    columns = {
+        "fp_store": ["doc_id", "_fp"],
+        "img_exact_store": ["doc_id", "simhash"],
+        "sig_store_keys": ["doc_id", "_band", "_bucket"],
+        "img_near_store": ["doc_id", "simhash", "ci", "cv"],
+    }
+    for store, cols in columns.items():
         assert glob.glob(f"{base}/{store}/batch_id=0/*.parquet")
-        assert not glob.glob(f"{base}/{store}/*/_kb=*")
-        assert "_kb" in spark.read.parquet(f"{base}/{store}").columns
+        assert not glob.glob(f"{base}/{store}/*/*=*")
+        got_cols = spark.read.parquet(f"{base}/{store}").columns
+        if store == "sig_store_keys":
+            stamp = got_cols.pop(3)
+            assert stamp.startswith(_KEYS_STAMP_PREFIX), stamp
+        assert got_cols == cols + ["batch_id"], (store, got_cols)
 
 
 def test_pair_funnel_stream_matches_sequential_replay(spark, tmp_path):
